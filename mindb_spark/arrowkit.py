@@ -85,6 +85,21 @@ def fixed_width_matrix(arr, width: int | None = None) -> np.ndarray | None:
     return None
 
 
+def list_array(mat: np.ndarray):
+    """pyarrow list array with one (d,) row per row of a numpy (n, d)
+    matrix, keeping its dtype — the inverse of :func:`fixed_width_matrix`.
+
+    The offsets are 32-bit (Spark's ``array<...>`` maps to a plain list):
+    a matrix past 2^31 elements raises instead of wrapping."""
+    import pyarrow as pa
+
+    n, d = mat.shape
+    return pa.ListArray.from_arrays(
+        pa.array(np.arange(0, (n + 1) * d, d, dtype=np.int64), type=pa.int32()),
+        pa.array(np.ascontiguousarray(mat).ravel()),
+    )
+
+
 def flat_values(arr) -> tuple[np.ndarray, np.ndarray] | None:
     """(flat_values, row_offsets) for a list array of scalars.
 

@@ -24,15 +24,22 @@ latency — WITHOUT giving up the Spark path:
   results to the Spark two-stage path by construction (pinned by
   ``tests/test_resident.py``).
 - Staleness: the snapshot records the manifest counters it was built
-  from. Post-pin ADDS only grow the tail → the snapshot refreshes just
-  the tail block (one cheap pruned scan). DELETES of trained rows set a
-  tombstone mask (``refresh_deletes``: one id-column scan — at 10M rows
-  ~80 MB of ids vs the multi-GB vector reload a rebuild pays) until the
-  dead fraction passes ``_REBUILD_DEAD_FRACTION``; only a retrain or a
-  mask that dense forces a full rebuild. ``VectorDB.query`` checks
-  validity under the handle lock before every resident serve and falls
-  back to the Spark path whenever the snapshot cannot be (re)validated
-  within budget.
+  from. Writes through the handle that pinned it are applied in place
+  (write-through, ``with_added`` / ``with_removed``): the handle already
+  holds every row it writes, so under its path lock it installs a new
+  snapshot — added rows appended to the tail, removed ids dropped from
+  the tail and cleared in the tombstone mask — with no Spark scan.
+  Writes from ANY OTHER handle (or process) stale the fingerprint and
+  are repaired on the next query by a Spark refresh: adds only grow the
+  tail → ``refresh_tail`` reloads just the tail block (one cheap pruned
+  scan); deletes of trained rows → ``refresh_deletes`` recomputes the
+  tombstone mask (one id-column scan — at 10M rows ~80 MB of ids vs the
+  multi-GB vector reload a rebuild pays). Both paths share one budget
+  rule and the ``_REBUILD_DEAD_FRACTION`` cut: past either, the snapshot
+  is left stale and only a full rebuild (or disabling) follows, as it
+  does after a retrain. ``VectorDB.query`` checks validity under the
+  handle lock before every resident serve and falls back to the Spark
+  path whenever the snapshot cannot be (re)validated within budget.
 
 The snapshot is the SERVING-TIER cache for RAM-sized indexes (the only
 regime the reference supports at all); beyond-RAM corpora stay on the
@@ -122,6 +129,41 @@ class ResidentSnapshot:
     def estimate_tail_bytes(n: int, d: int, avg_meta: int = 256) -> int:
         """Pre-collect RAM estimate of a tail block (no codes/bterm)."""
         return int(n * (8 + 8 * d + avg_meta))
+
+    @staticmethod
+    def _tail_bound(manifest: dict) -> int:
+        """Upper bound on the tail row count: ids grow monotonically, so
+        (max_id - max_trained_id) bounds it — a corpus trained small then
+        grown by streaming adds must not blow the budget through the
+        tail."""
+        return max(
+            0, int(manifest.get("max_id", -1)) - int(manifest.get("max_trained_id", -1))
+        )
+
+    def _fits(self, manifest: dict, dim: int, max_bytes: int | None) -> bool:
+        """The one budget rule of refresh and write-through, on the same
+        conservative estimate basis as build()'s pre-collect gate, so
+        enable/refresh/write-through/rebuild enforce ONE rule."""
+        if max_bytes is None:
+            return True
+        est = self.estimate_bytes(
+            int(self.ids.size), dim, int(self.codes.shape[1])
+        ) + self.estimate_tail_bytes(self._tail_bound(manifest), dim)
+        return est <= max_bytes
+
+    def _evolve(
+        self, manifest: dict, tail_ids, tail_vectors, tail_metadata, live_mask
+    ) -> "ResidentSnapshot":
+        """A NEW snapshot at ``manifest``'s fingerprint sharing the big
+        indexed arrays (so a concurrently serving thread never observes
+        torn state); only the tail block and the mask are replaced."""
+        return ResidentSnapshot(
+            self.artifacts, self.n_probe,
+            self.ids, self.codes, self.bterm, self.cell_ids, self.cell_off,
+            self.vectors, self.metadata, tail_ids, tail_vectors,
+            tail_metadata, self.manifest_fingerprint(manifest),
+            live_mask=live_mask,
+        )
 
     def nbytes(self) -> int:
         base = (
@@ -248,14 +290,10 @@ class ResidentSnapshot:
         d = int(db.vector_dimension)
         m = int(artifacts.m)
         n_est = int(manifest.get("num_vectors_trained_on") or 0)
-        # the tail is part of the snapshot: ids grow monotonically, so
-        # (max_id - max_trained_id) bounds the tail row count — a corpus
-        # trained small then grown by streaming adds must not blow the
-        # budget through the tail collect
-        tail_bound = max(
-            0, int(manifest.get("max_id", -1)) - int(manifest.get("max_trained_id", -1))
+        # the tail is part of the snapshot
+        est = cls.estimate_bytes(n_est, d, m) + cls.estimate_tail_bytes(
+            cls._tail_bound(manifest), d
         )
-        est = cls.estimate_bytes(n_est, d, m) + cls.estimate_tail_bytes(tail_bound, d)
         if max_bytes is not None and est > max_bytes:
             return None
 
@@ -473,26 +511,13 @@ class ResidentSnapshot:
         ):
             return None
         dim = self.vectors.shape[1] if self.vectors.size else int(db.vector_dimension)
-        tail_bound = max(
-            0, int(manifest.get("max_id", -1)) - int(manifest.get("max_trained_id", -1))
-        )
-        # same conservative estimate basis as build()'s pre-collect gate,
-        # so enable/refresh/rebuild enforce ONE budget rule
-        est = self.estimate_bytes(
-            int(self.ids.size), dim, int(self.codes.shape[1])
-        ) + self.estimate_tail_bytes(tail_bound, dim)
-        if max_bytes is not None and est > max_bytes:
+        if not self._fits(manifest, dim, max_bytes):
             return None
         watermark = int(manifest["max_trained_id"])
         t_ids, t_vecs, t_meta = self._collect_tail(
             db.vectors().select("id", "vector", "metadata"), watermark, dim
         )
-        return ResidentSnapshot(
-            self.artifacts, self.n_probe,
-            self.ids, self.codes, self.bterm, self.cell_ids, self.cell_off,
-            self.vectors, self.metadata, t_ids, t_vecs, t_meta, new_fp,
-            live_mask=self.live_mask,
-        )
+        return self._evolve(manifest, t_ids, t_vecs, t_meta, self.live_mask)
 
     def refresh_deletes(
         self, db, max_bytes: int | None = None
@@ -524,13 +549,7 @@ class ResidentSnapshot:
         if (new_fp[0], new_fp[2], new_fp[4]) != (old[0], old[2], old[4]):
             return None
         dim = self.vectors.shape[1] if self.vectors.size else int(db.vector_dimension)
-        tail_bound = max(
-            0, int(manifest.get("max_id", -1)) - int(manifest.get("max_trained_id", -1))
-        )
-        est = self.estimate_bytes(
-            int(self.ids.size), dim, int(self.codes.shape[1])
-        ) + self.estimate_tail_bytes(tail_bound, dim)
-        if max_bytes is not None and est > max_bytes:
+        if not self._fits(manifest, dim, max_bytes):
             return None
         watermark = int(manifest["max_trained_id"])
         live = db.vectors().select("id", "vector", "metadata")
@@ -546,15 +565,62 @@ class ResidentSnapshot:
             .to_numpy(dtype=np.int64)
         )
         mask = np.isin(self.ids, live_ids)
-        dead = int(self.ids.size - mask.sum())
-        if self.ids.size and dead / self.ids.size > self._REBUILD_DEAD_FRACTION:
+        if self._too_dead(mask):
             return None
         t_ids, t_vecs, t_meta = self._collect_tail(live, watermark, dim)
-        return ResidentSnapshot(
-            self.artifacts, self.n_probe,
-            self.ids, self.codes, self.bterm, self.cell_ids, self.cell_off,
-            self.vectors, self.metadata, t_ids, t_vecs, t_meta, new_fp,
-            live_mask=None if dead == 0 else mask,
+        return self._evolve(
+            manifest, t_ids, t_vecs, t_meta, None if mask.all() else mask
+        )
+
+    def _too_dead(self, mask: np.ndarray) -> bool:
+        """The mask's dead fraction passes ``_REBUILD_DEAD_FRACTION``."""
+        dead = int(self.ids.size - mask.sum())
+        return bool(self.ids.size) and dead / self.ids.size > self._REBUILD_DEAD_FRACTION
+
+    # ----------------------------------------------------- write-through
+    def with_added(
+        self, manifest: dict, ids: np.ndarray, vectors: np.ndarray,
+        metadata: list, max_bytes: int | None = None,
+    ) -> "ResidentSnapshot | None":
+        """Write-through of the pinning handle's own add: the rows join
+        the tail exactly as ``_collect_tail`` would read them back —
+        ``vectors`` are the stored float32 values, widened to float64;
+        ``metadata`` the stored JSON strings. ``manifest`` is the
+        post-write manifest. Returns None (the caller leaves the
+        snapshot stale, so the query path refreshes or disables it) when
+        the grown tail no longer fits ``max_bytes``."""
+        if not self._fits(manifest, vectors.shape[1], max_bytes):
+            return None
+        return self._evolve(
+            manifest,
+            np.concatenate([self.tail_ids, np.asarray(ids, dtype=np.int64)]),
+            np.concatenate([self.tail_vectors, vectors.astype(np.float64)]),
+            np.concatenate([self.tail_metadata, np.array(metadata, dtype=object)]),
+            self.live_mask,
+        )
+
+    def with_removed(
+        self, manifest: dict, ids, dim: int, max_bytes: int | None = None
+    ) -> "ResidentSnapshot | None":
+        """Write-through of the pinning handle's own remove (``ids``: the
+        ids that existed; ``manifest``: the post-write manifest): they
+        leave the tail and are cleared in the tombstone mask — the mask
+        ``refresh_deletes`` would compute from the rewritten table.
+        Returns None under refresh_deletes' own rules: past
+        ``_REBUILD_DEAD_FRACTION`` or over ``max_bytes``."""
+        if not self._fits(manifest, dim, max_bytes):
+            return None
+        gone = np.asarray(ids, dtype=np.int64)
+        mask = self.live_mask
+        hit = np.isin(self.ids, gone)
+        if hit.any():
+            mask = ~hit if mask is None else mask & ~hit
+            if self._too_dead(mask):
+                return None
+        keep = ~np.isin(self.tail_ids, gone)
+        return self._evolve(
+            manifest, self.tail_ids[keep], self.tail_vectors[keep],
+            self.tail_metadata[keep], mask,
         )
 
     # ------------------------------------------------------------- query

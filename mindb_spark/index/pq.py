@@ -143,29 +143,32 @@ def _wide_blas(n_threads: int | None = None):
     Do not wrap reductions whose output is smaller than the thread count
     (split-K risk) without extending that test.
 
-    No-ops (yields) when the pool is already wider than one thread, when
+    Raises only pools whose current width p satisfies ``0 < p < n``;
+    no-ops (yields) when every pool is already at least ``n`` wide, when
     no control handle is available, or when a ``_single_threaded_blas``
     pin is active (never fight the pin — it exists to protect executor
-    workers and the m-way book pool).
+    workers and the m-way book pool). The pin check, the raise and the
+    restore all hold ``_PIN_LOCK``, so a pin entered on another thread
+    cannot land between the check and the raise and be overwritten.
     """
     import os
 
     n = n_threads or os.cpu_count() or 1
-    with _PIN_LOCK:
-        pinned = _PIN_DEPTH > 0
     controls = _blas_controls()
     prev = []
-    if not pinned and controls:
-        for h, set_fn, get_fn in controls:
-            p = getattr(h, get_fn)()
-            if 0 < p < n:
-                getattr(h, set_fn)(n)
-                prev.append((h, set_fn, p))
+    with _PIN_LOCK:
+        if _PIN_DEPTH == 0:
+            for h, set_fn, get_fn in controls:
+                p = getattr(h, get_fn)()
+                if 0 < p < n:
+                    getattr(h, set_fn)(n)
+                    prev.append((h, set_fn, p))
     try:
         yield
     finally:
-        for h, set_fn, p in prev:
-            getattr(h, set_fn)(p)
+        with _PIN_LOCK:
+            for h, set_fn, p in prev:
+                getattr(h, set_fn)(p)
 
 
 @contextlib.contextmanager

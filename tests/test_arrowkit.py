@@ -12,6 +12,7 @@ import pyarrow as pa
 from mindb_spark.arrowkit import (
     fixed_width_matrix,
     flat_values,
+    list_array,
     nested_matrix,
     one_chunk,
 )
@@ -138,3 +139,16 @@ def test_fixed_width_matrix_chunked_ragged_or_empty_is_none():
         ]
     )
     assert fixed_width_matrix_chunked(holey, 2).tolist() == [[1.0, 2.0], [3.0, 4.0]]
+
+
+def test_list_array_inverts_fixed_width_matrix():
+    for dt, pa_t in ((np.float32, pa.float32()), (np.float64, pa.float64())):
+        mat = np.arange(12, dtype=dt).reshape(4, 3)
+        arr = list_array(mat)
+        assert arr.type == pa.list_(pa_t)
+        assert arr.to_pylist() == mat.tolist()
+        assert np.array_equal(fixed_width_matrix(arr, 3), mat)
+    # a non-contiguous view is laid out row by row
+    mat = np.arange(12, dtype=np.float32).reshape(3, 4)[:, ::2]
+    assert list_array(mat).to_pylist() == mat.tolist()
+    assert len(list_array(np.empty((0, 5), dtype=np.float32))) == 0

@@ -711,3 +711,66 @@ def test_add_dataframe_arrow_route_bitexact(spark, tmp_path):
             assert np.abs(nrm[live] - 1.0).max() < 1e-6
         assert got[7].tolist() == [0.0] * d  # zero vector unchanged
         db.delete()
+
+
+def test_add_writes_one_parquet_file_bit_equal_to_spark_rows(spark, tmp_path):
+    """add() writes each batch as ONE parquet file straight from Arrow —
+    no temp, _SUCCESS or crc leftovers — and every reader (vectors(),
+    train's pinned file list, compact) gets back exactly the rows the
+    Spark write of the same input stores (double -> float cast)."""
+    import os
+
+    from mindb_spark.core.database import VECTOR_SCHEMA
+
+    rng = np.random.default_rng(21)
+    db = VectorDB(spark, "layout", base_path=str(tmp_path))
+    batches = [
+        [(v, {"b": b, "i": i, "s": "\u00e9\"x"}) for i, v in enumerate(_mk(rng, n, 12))]
+        for b, n in enumerate((1, 5, 3))
+    ]
+    before = set(os.listdir(db._data_dir))
+    ids = []
+    for batch in batches:
+        ids += db.add(batch)
+        now = set(os.listdir(db._data_dir))
+        new = now - before
+        assert len(new) == 1 and new.pop().endswith(".parquet"), now - before
+        before = now
+    assert ids == list(range(9))
+
+    # the old write path: Spark casts the double vectors to float
+    from mindb_spark.core.validation import validate_and_normalize_add
+
+    rows = []
+    for batch in batches:
+        vecs, metas = validate_and_normalize_add(batch, 12)
+        for v, m in zip(vecs, metas):
+            rows.append((len(rows), v.astype(np.float64).tolist(), json.dumps(m)))
+    ref_dir = str(tmp_path / "spark_written")
+    spark.createDataFrame(rows, VECTOR_SCHEMA).write.parquet(ref_dir)
+    ref = spark.read.schema(VECTOR_SCHEMA).parquet(ref_dir)
+
+    def table(df):
+        t = df.orderBy("id").toArrow()
+        return (
+            t.column("id").to_pylist(),
+            np.array(t.column("vector").to_pylist(), dtype=np.float32).view(np.uint32),
+            t.column("metadata").to_pylist(),
+        )
+
+    def same(df):
+        got, want = table(df), table(ref)
+        assert got[0] == want[0] and got[2] == want[2]
+        assert np.array_equal(got[1], want[1])  # float32 bits
+
+    same(db.vectors())
+    files = sorted(  # train()'s pinned file list
+        os.path.join(db._data_dir, f)
+        for f in os.listdir(db._data_dir)
+        if f.endswith(".parquet")
+    )
+    assert len(files) == 3
+    same(spark.read.schema(VECTOR_SCHEMA).parquet(*files))
+    assert db.compact() == 1
+    same(db.vectors())
+    db.delete()

@@ -292,7 +292,6 @@ def test_wide_blas_respects_active_pin_and_restores():
     h, set_fn, get_fn = controls[0]
     before = getattr(h, get_fn)()
     with pqmod._wide_blas(16):
-        assert getattr(h, get_fn)() >= min(16, before) or True
         inside = getattr(h, get_fn)()
         assert inside in (16, before)
     assert getattr(h, get_fn)() == before

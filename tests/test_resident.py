@@ -288,3 +288,161 @@ def test_resident_untrained_returns_false(spark, tmp_path):
     db.add([(v, {}) for v in rng.normal(size=(50, 8)).astype(np.float32)])
     assert db.enable_resident_serving() is False
     assert db.resident_info() is None
+
+
+def _count_spark_repairs(monkeypatch) -> dict:
+    """Count the snapshot's Spark repairs (refresh_tail, refresh_deletes,
+    build) for the rest of the test."""
+    from mindb_spark.core.resident import ResidentSnapshot as RS
+
+    calls = dict.fromkeys(("refresh_tail", "refresh_deletes", "build"), 0)
+
+    def counted(name, fn):
+        def run(*args, **kwargs):
+            calls[name] += 1
+            return fn(*args, **kwargs)
+        return run
+
+    monkeypatch.setattr(RS, "refresh_tail", counted("refresh_tail", RS.refresh_tail))
+    monkeypatch.setattr(
+        RS, "refresh_deletes", counted("refresh_deletes", RS.refresh_deletes)
+    )
+    monkeypatch.setattr(RS, "build", classmethod(counted("build", RS.build.__func__)))
+    return calls
+
+
+def test_write_through_matches_rebuild_and_spark(spark, trained_db, corpus, monkeypatch):
+    """The pinning handle's own adds and removes are applied to the
+    snapshot in place. After every step of a seeded random sequence of
+    adds, tail removes and trained-row removes, its answers (ids and
+    float64 scores) are bit-equal to a fresh rebuild and to the Spark
+    path, and no Spark refresh or rebuild ran. A second handle's add
+    still goes through refresh_tail."""
+    import os
+
+    from mindb_spark.core.resident import ResidentSnapshot
+
+    db = trained_db
+    assert db.enable_resident_serving() is True
+    # a handle without a snapshot answers through the Spark path
+    other = VectorDB(spark, db.name, base_path=os.path.dirname(db.path))
+    calls = _count_spark_repairs(monkeypatch)
+    none = dict.fromkeys(calls, 0)
+    rng = np.random.default_rng(5)
+    queries = corpus[rng.choice(corpus.shape[0], 2, replace=False)]
+    queries = queries + 0.1 * rng.normal(size=queries.shape).astype(np.float32)
+    tail: list[int] = []
+    kinds = ["add", "add", "remove_trained", "add", "remove_tail",
+             "remove_trained", "add", "remove_tail"]
+    rng.shuffle(kinds[1:])  # start with an add so a tail exists
+
+    def check(step):
+        got = db.query_batch_local(queries, 500, 5)
+        assert calls == none, (step, calls)
+        fresh = ResidentSnapshot.build(db, None).query(queries, 500, 5)
+        assert got == fresh, step  # ids, metadata and float64 scores
+        for q, g in zip(queries, got):
+            s = other.query(q, preliminary_top_k=500, final_top_k=5)
+            assert s["ids"] == g["ids"], step
+            assert s["cosine_similarity"] == g["cosine_similarity"], step
+        calls.update(none)
+
+    for step, kind in enumerate(kinds):
+        if kind == "add" or (kind == "remove_tail" and not tail):
+            # near-copies of the queries, so tail rows reach the top 5
+            n = int(rng.integers(1, 5))
+            vecs = queries[rng.integers(0, len(queries), n)]
+            vecs = vecs + 0.05 * rng.normal(size=vecs.shape).astype(np.float32)
+            tail += db.add([(v, {"step": step}) for v in vecs])
+        elif kind == "remove_tail":
+            victim = tail.pop(int(rng.integers(len(tail))))
+            assert db.remove([victim]) == [victim]
+        else:
+            # a query's current best trained row plus two random ones
+            best = next(
+                i for i in db.query(queries[step % 2], final_top_k=20)["ids"]
+                if i < corpus.shape[0]
+            )
+            victims = [best] + [int(i) for i in rng.integers(0, corpus.shape[0], 2)]
+            db.remove(victims)
+        check(step)
+    info = db.resident_info()
+    assert info["masked_rows"] > 0 and info["tail_rows"] == len(tail)
+    assert info["rows"] == corpus.shape[0]  # never rebuilt
+
+    other.add([(queries[0], {"other": True})])
+    got = db.query_batch_local(queries, 500, 5)
+    assert calls == dict(none, refresh_tail=1)
+    assert got == ResidentSnapshot.build(db, None).query(queries, 500, 5)
+
+
+def test_write_through_budget_overflow_leaves_snapshot_stale(spark, tmp_path, corpus, monkeypatch):
+    """An own-handle add that grows the tail bound past the budget is not
+    written through: the snapshot stays stale, and the query path's
+    repairs refuse and disable it (no rebuild storm)."""
+    from mindb_spark.core.resident import ResidentSnapshot
+
+    db = VectorDB(spark, "wtbudget", base_path=str(tmp_path))
+    db.add([(v, {}) for v in corpus[:5100]])
+    db.train(use_two_level_clustering=False)
+    d = corpus.shape[1]
+    budget = ResidentSnapshot.estimate_bytes(
+        5100, d, db._load_artifacts().m
+    ) + ResidentSnapshot.estimate_tail_bytes(10, d)
+    assert db.enable_resident_serving(max_bytes=budget) is True
+    calls = _count_spark_repairs(monkeypatch)
+    db.add([(corpus[0], {})])  # fits: written through
+    pinned = db._resident
+    assert pinned.tail_ids.size == 1 and calls["refresh_tail"] == 0
+    db.add([(corpus[1], {}) for _ in range(20)])  # tail bound 21 > 10
+    assert db._resident is pinned  # untouched, now stale
+    assert pinned.fingerprint != ResidentSnapshot.manifest_fingerprint(db._manifest)
+    assert db.query_batch_local(corpus[:1]) is None  # over budget -> Spark
+    assert db.resident_info() is None
+    assert calls == {"refresh_tail": 1, "refresh_deletes": 1, "build": 1}
+
+
+def test_write_through_dense_delete_falls_back_to_rebuild(trained_db, corpus, monkeypatch):
+    """An own-handle remove that pushes the dead fraction past
+    _REBUILD_DEAD_FRACTION is not written through; the next query
+    rebuilds, exactly as for another handle's delete."""
+    db = trained_db
+    assert db.enable_resident_serving() is True
+    calls = _count_spark_repairs(monkeypatch)
+    db.remove(list(range(100)))  # sparse: masked in place
+    pinned = db._resident
+    assert db.resident_info()["masked_rows"] == 100
+    db.remove(list(range(100, 700)))  # 700 of 6000 dead > 10%
+    assert db._resident is pinned
+    q = corpus[1]
+    got = db.query(q, preliminary_top_k=500, final_top_k=3)
+    assert calls == {"refresh_tail": 1, "refresh_deletes": 1, "build": 1}
+    info = db.resident_info()
+    assert info["rows"] == 6000 - 700 and info["masked_rows"] == 0
+    want = _spark_results(db, [q], 500, 3)[0]
+    assert got["ids"] == want["ids"]
+    assert got["cosine_similarity"] == want["cosine_similarity"]
+
+
+def test_add_and_resident_query_with_arrow_disabled(spark, tmp_path, corpus):
+    """Neither the add path nor the resident snapshot depends on
+    spark.sql.execution.arrow.pyspark.enabled."""
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        db = VectorDB(spark, "arrowoff", base_path=str(tmp_path))
+        db.add([(v, {"i": int(i)}) for i, v in enumerate(corpus[:5100])])
+        db.train(use_two_level_clustering=False)
+        assert db.enable_resident_serving() is True
+        new = db.add([(corpus[3], {"tail": True})])
+        got = db.query(corpus[3], preliminary_top_k=200, final_top_k=2)
+        assert sorted(got["ids"]) == sorted([3, new[0]])
+        db.remove([3])
+        got = db.query(corpus[3], preliminary_top_k=200, final_top_k=2)
+        assert got["ids"][0] == new[0] and 3 not in got["ids"]
+        want = _spark_results(db, [corpus[3]], 200, 2)[0]
+        assert got["ids"] == want["ids"]
+        assert got["cosine_similarity"] == want["cosine_similarity"]
+    finally:
+        spark.conf.set(key, prev)
