@@ -705,12 +705,12 @@ def main() -> None:
         from mindb_spark.core.resident import ResidentSnapshot
 
         # covering codes already carry the vector column — no join needed
-        snap_rows = (
+        snap_table = (
             codes_cov.select("cluster_id", "id", "code", "bterm", "vector")
-            .orderBy("cluster_id", "id").collect()
+            .orderBy("cluster_id", "id").toArrow()
         )
-        snap = ResidentSnapshot.assemble(
-            arts_cov, params.n_probe, snap_rows, 64, arts_cov.m, True
+        snap = ResidentSnapshot.assemble_from_arrow(
+            arts_cov, params.n_probe, snap_table, 64, arts_cov.m, True
         )
         for _ in range(3):
             snap.query(qmat[:1], preliminary_top_k=500, final_top_k=50)

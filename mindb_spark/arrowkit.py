@@ -9,11 +9,20 @@ columns flatten to one (n, w) numpy view per batch, nested list
 columns to one flat matrix plus CSR offsets, and non-numeric columns
 ride through as Arrow arrays (take/filter) without ever becoming
 Python objects.
+
+One contract for every decoder here: decode or raise. A column that
+is not a uniform-width matrix — ragged rows, null rows, or null values
+inside the rows the array references — raises ``ValueError`` naming
+the shape problem; no decoder returns ``None`` and no caller keeps a
+per-row fallback. Matrix decoders accept a pyarrow ``Array`` or a
+``ChunkedArray`` (a collected table column). :func:`collect_matrix` is
+the one driver-side collect of a matrix column.
 """
 
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 
 
 def one_chunk(col):
@@ -21,68 +30,77 @@ def one_chunk(col):
 
     NOT safe for plain list/binary/string columns whose concatenated
     child length exceeds 2^31 (combine_chunks overflows the 32-bit
-    offsets — hit at 3M x 768-d vectors = 2.3B child doubles); use
-    :func:`fixed_width_matrix_chunked` for wide matrix columns.
+    offsets — hit at 3M x 768-d vectors = 2.3B child doubles); pass
+    wide matrix columns to :func:`fixed_width_matrix` unconcatenated.
     """
     return col.chunk(0) if col.num_chunks == 1 else col.combine_chunks()
 
 
-def fixed_width_matrix_chunked(col, width: int) -> np.ndarray | None:
-    """(n, width) numpy matrix from a CHUNKED uniform-width list/binary
-    column, flattening each chunk as a zero-copy view and stacking.
+def _check_width(widths: np.ndarray, width: int | None) -> int:
+    """The one row width of ``widths``, or ValueError."""
+    if widths.size and widths.min() != widths.max():
+        raise ValueError(
+            f"ragged rows: widths {int(widths.min())}..{int(widths.max())}"
+        )
+    w = int(widths[0]) if widths.size else (width or 0)
+    if width is not None and w != width:
+        raise ValueError(f"row width {w}, expected {width}")
+    return w
 
-    One memcpy when multiple chunks (np.vstack) — combine_chunks would
-    instead overflow Arrow's 32-bit list offsets past ~2.1B child
-    elements, which a 3M x 768-d driver collect already exceeds.
-    Returns None when any chunk is ragged or carries nulls (callers
-    fall back to the per-row path).
+
+def fixed_width_matrix(col, width: int | None = None) -> np.ndarray:
+    """(n, w) numpy matrix over a uniform-width pyarrow binary/list
+    Array or ChunkedArray.
+
+    Zero-copy for the data payload of an Array or a one-chunk column;
+    several chunks are flattened as views and stacked (one memcpy) —
+    ``combine_chunks`` would instead overflow Arrow's 32-bit list
+    offsets past ~2.1B child elements, which a 3M x 768-d driver
+    collect already exceeds. Empty input gives (0, ``width`` or 0).
+    Raises ValueError on ragged rows, null rows, a width other than
+    ``width``, or null values inside the referenced rows (nulls outside
+    a slice's window are not looked at).
     """
-    chunks = list(col.chunks) if hasattr(col, "chunks") else [col]
-    mats = []
-    for ch in chunks:
-        if len(ch) == 0:
-            continue
-        m = fixed_width_matrix(ch, width)
-        if m is None:
-            return None
-        mats.append(m)
-    if not mats:
-        return None
-    return mats[0] if len(mats) == 1 else np.vstack(mats)
-
-
-def fixed_width_matrix(arr, width: int | None = None) -> np.ndarray | None:
-    """(n, w) numpy view over a uniform-width pyarrow binary/list array.
-
-    Zero-copy for the data payload. Returns None when the array is
-    ragged or carries nulls; callers fall back to the slow per-row path.
-    """
-    import pyarrow as pa
-
-    if arr.null_count:
-        return None
-    n = len(arr)
-    if pa.types.is_binary(arr.type) or pa.types.is_large_binary(arr.type):
-        off_dt = np.int64 if pa.types.is_large_binary(arr.type) else np.int32
-        bufs = arr.buffers()
-        offs = np.frombuffer(bufs[1], dtype=off_dt)[arr.offset : arr.offset + n + 1]
-        widths = np.diff(offs)
-        w = int(widths[0]) if n else (width or 0)
-        if (width is not None and w != width) or (n and not (widths == w).all()):
-            return None
+    if isinstance(col, pa.ChunkedArray):
+        mats = []
+        for ch in [c for c in col.chunks if len(c)] or [pa.array([], col.type)]:
+            mats.append(fixed_width_matrix(ch, width))
+            width = mats[-1].shape[1]
+        return mats[0] if len(mats) == 1 else np.vstack(mats)
+    if col.null_count:
+        raise ValueError(f"{col.null_count} null rows in a matrix column")
+    n = len(col)
+    if pa.types.is_binary(col.type) or pa.types.is_large_binary(col.type):
+        off_dt = np.int64 if pa.types.is_large_binary(col.type) else np.int32
+        bufs = col.buffers()
+        offs = np.frombuffer(bufs[1], dtype=off_dt)[col.offset : col.offset + n + 1]
+        w = _check_width(np.diff(offs), width)
         data = np.frombuffer(bufs[2], dtype=np.uint8)
         return data[offs[0] : offs[-1]].reshape(n, w)
-    if pa.types.is_list(arr.type) or pa.types.is_large_list(arr.type):
-        if arr.values.null_count:
-            return None
-        offs = arr.offsets.to_numpy(zero_copy_only=False)
-        widths = np.diff(offs)
-        w = int(widths[0]) if n else (width or 0)
-        if (width is not None and w != width) or (n and not (widths == w).all()):
-            return None
-        flat = arr.values.to_numpy(zero_copy_only=False)
-        return flat[offs[0] : offs[-1]].reshape(n, w)
-    return None
+    if pa.types.is_list(col.type) or pa.types.is_large_list(col.type):
+        offs = col.offsets.to_numpy(zero_copy_only=False)
+        w = _check_width(np.diff(offs), width)
+        return _values_window(col, offs).reshape(n, w)
+    raise ValueError(f"not a list or binary column: {col.type}")
+
+
+def _values_window(arr, offs: np.ndarray) -> np.ndarray:
+    """numpy view of the child values that rows ``offs`` reference;
+    ValueError on a null among them."""
+    window = arr.values.slice(int(offs[0]), int(offs[-1] - offs[0]))
+    if window.null_count:
+        raise ValueError(f"{window.null_count} null values inside the rows")
+    return window.to_numpy(zero_copy_only=False)
+
+
+def collect_matrix(df, col: str) -> np.ndarray:
+    """(n, d) float64 matrix of a uniform-width numeric array column of
+    a Spark DataFrame, collected as Arrow batches (``toArrow``, which
+    does not depend on the Arrow flag) — a 30k x 64 pickled-row collect
+    measures seconds, the Arrow path tens of ms. Rows come in
+    ``collect()`` order; float32→float64 widening is exact."""
+    tbl = df.select(col).toArrow()
+    return fixed_width_matrix(tbl.column(0)).astype(np.float64, copy=False)
 
 
 def list_array(mat: np.ndarray):
@@ -91,8 +109,6 @@ def list_array(mat: np.ndarray):
 
     The offsets are 32-bit (Spark's ``array<...>`` maps to a plain list):
     a matrix past 2^31 elements raises instead of wrapping."""
-    import pyarrow as pa
-
     n, d = mat.shape
     return pa.ListArray.from_arrays(
         pa.array(np.arange(0, (n + 1) * d, d, dtype=np.int64), type=pa.int32()),
@@ -100,16 +116,15 @@ def list_array(mat: np.ndarray):
     )
 
 
-def flat_values(arr) -> tuple[np.ndarray, np.ndarray] | None:
+def flat_values(arr) -> tuple[np.ndarray, np.ndarray]:
     """(flat_values, row_offsets) for a list array of scalars.
 
-    ``row i`` owns ``flat[offs[i] - offs[0] : offs[i+1] - offs[0]]``.
-    Returns None on nulls (top level or values)."""
-    if arr.null_count or arr.values.null_count:
-        return None
+    ``row i`` owns ``flat[offs[i] : offs[i+1]]``. ValueError on null
+    rows or null values inside them."""
+    if arr.null_count:
+        raise ValueError(f"{arr.null_count} null rows in a list column")
     offs = arr.offsets.to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
-    flat = arr.values.to_numpy(zero_copy_only=False)
-    return flat[offs[0] : offs[-1]], offs - offs[0]
+    return _values_window(arr, offs), offs - offs[0]
 
 
 def nested_matrix(arr, width: int | None = None):
@@ -117,17 +132,12 @@ def nested_matrix(arr, width: int | None = None):
 
     Returns ``(mat, offs)`` where bucket ``i``'s rows are
     ``mat[offs[i] : offs[i+1]]`` — so a per-bucket GEMM kernel does zero
-    per-bucket conversion work (one slice view each). None when ragged
-    inner widths or nulls anywhere."""
+    per-bucket conversion work (one slice view each). ValueError on
+    null buckets or when the inner rows are not a uniform-width matrix
+    (:func:`fixed_width_matrix`)."""
     if arr.null_count:
-        return None
-    inner = arr.values  # list<numeric> array holding all buckets' rows
+        raise ValueError(f"{arr.null_count} null rows in a list column")
     offs = arr.offsets.to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
-    offs = offs - offs[0]
     # window the inner rows this (possibly sliced) outer array covers
-    start = int(arr.offsets.to_numpy(zero_copy_only=False)[0])
-    inner = inner.slice(start, int(offs[-1]))
-    mat = fixed_width_matrix(inner, width)
-    if mat is None:
-        return None
-    return mat, offs
+    inner = arr.values.slice(int(offs[0]), int(offs[-1] - offs[0]))
+    return fixed_width_matrix(inner, width), offs - offs[0]

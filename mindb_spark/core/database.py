@@ -76,25 +76,10 @@ def _l2_normalize_ingest_arrow(df: DataFrame) -> DataFrame:
         for b in batches:
             if b.num_rows == 0:
                 continue
-            vec = b.column(1)
-            mat = _fwm(vec)
-            if mat is not None:
-                m = mat.astype(np.float64, copy=False)
-                nrm = np.sqrt(np.einsum("ij,ij->i", m, m))
-                nrm[nrm == 0.0] = 1.0
-                varr = _list_array((m / nrm[:, None]).astype(np.float32))
-            else:
-                # ragged/null fallback (defensive: the batch-atomic size
-                # check upstream already rejected ragged input)
-                out_rows = []
-                for r in vec.to_pylist():
-                    if r is None:
-                        out_rows.append(None)
-                        continue
-                    a = np.asarray(r, dtype=np.float64)
-                    nn = float(np.linalg.norm(a)) or 1.0
-                    out_rows.append((a / nn).astype(np.float32).tolist())
-                varr = pa.array(out_rows, type=pa.list_(pa.float32()))
+            m = _fwm(b.column(1)).astype(np.float64, copy=False)
+            nrm = np.sqrt(np.einsum("ij,ij->i", m, m))
+            nrm[nrm == 0.0] = 1.0
+            varr = _list_array((m / nrm[:, None]).astype(np.float32))
             yield pa.RecordBatch.from_arrays(
                 [b.column(0), varr, b.column(2)], ["id", "vector", "metadata"]
             )
@@ -784,17 +769,22 @@ class VectorDB:
             first = src.select("_vec").first()
             if first is None:
                 return 0
+            if first[0] is None:
+                raise V.ValidationError("Vector is null")
             incoming_dim = len(first[0])
             if dim is not None and incoming_dim != dim:
                 raise V.ValidationError(
                     f"Vector is not the correct size. Expected size: {dim} "
                     f"Actual size: {incoming_dim}"
                 )
-            # batch-atomic dimension check before any write
-            bad = src.where(F.size(F.col("_vec")) != incoming_dim).limit(1).count()
+            # batch-atomic null/dimension check before any write (under
+            # ANSI mode size(NULL) is NULL, so nulls need their own test)
+            vec = F.col("_vec")
+            bad = src.where(vec.isNull() | (F.size(vec) != incoming_dim)).limit(1).count()
             if bad:
                 raise V.ValidationError(
-                    f"Vector is not the correct size. Expected size: {incoming_dim}"
+                    f"Vector is null or not the correct size. Expected size: "
+                    f"{incoming_dim}"
                 )
 
             # cumulative per-partition offsets: rows-per-partition is ONE

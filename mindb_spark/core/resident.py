@@ -339,46 +339,6 @@ class ResidentSnapshot:
         )
 
     @classmethod
-    def assemble(
-        cls,
-        artifacts,
-        n_probe: int,
-        rows,
-        d: int,
-        m: int,
-        has_bterm: bool,
-        t_ids=None,
-        t_vecs=None,
-        t_meta=None,
-        fingerprint: tuple = (),
-    ) -> "ResidentSnapshot":
-        """Build the snapshot arrays from collected codes-join rows
-        (``cluster_id, id, code[, bterm], vector, metadata`` — SORTED by
-        (cluster_id, id)). Shared by :meth:`build` and out-of-DB callers
-        (e.g. bench probes over a raw ``build_index`` output)."""
-        n = len(rows)
-        ids = np.fromiter((r.id for r in rows), dtype=np.int64, count=n)
-        cells = np.fromiter((r.cluster_id for r in rows), dtype=np.int64, count=n)
-        codes = (
-            np.frombuffer(b"".join(bytes(r.code) for r in rows), dtype=np.uint8)
-            .reshape(n, m)
-            if n
-            else np.empty((0, m), dtype=np.uint8)
-        )
-        vectors = np.array([r.vector for r in rows], dtype=np.float64).reshape(n, d)
-        metadata = np.array(
-            [getattr(r, "metadata", None) for r in rows], dtype=object
-        )
-        bterm = (
-            np.fromiter((r.bterm for r in rows), dtype=np.float32, count=n)
-            if has_bterm else None
-        )
-        return cls._from_arrays(
-            artifacts, n_probe, ids, cells, codes, bterm, vectors, metadata,
-            d, m, t_ids, t_vecs, t_meta, fingerprint,
-        )
-
-    @classmethod
     def assemble_from_arrow(
         cls,
         artifacts,
@@ -410,18 +370,9 @@ class ResidentSnapshot:
             zero_copy_only=False).astype(np.int64, copy=False)
         cells = table.column("cluster_id").to_numpy(
             zero_copy_only=False).astype(np.int64, copy=False)
-        codes = AK.fixed_width_matrix_chunked(table.column("code"), m)
-        if codes is None:  # ragged/null codes: impossible post-build, but safe
-            codes = np.frombuffer(
-                b"".join(bytes(c) for c in table.column("code").to_pylist()),
-                dtype=np.uint8,
-            ).reshape(n, m) if n else np.empty((0, m), dtype=np.uint8)
-        vectors = AK.fixed_width_matrix_chunked(table.column("vector"), d)
-        if vectors is None:
-            vectors = np.array(
-                table.column("vector").to_pylist(), dtype=np.float64
-            ).reshape(n, d)
-        vectors = vectors.astype(np.float64, copy=False)
+        codes = AK.fixed_width_matrix(table.column("code"), m)
+        vectors = AK.fixed_width_matrix(table.column("vector"), d).astype(
+            np.float64, copy=False)
         metadata = (
             table.column("metadata").to_numpy(zero_copy_only=False)
             if "metadata" in table.column_names
@@ -477,15 +428,10 @@ class ResidentSnapshot:
         from mindb_spark import arrowkit as AK
 
         tail = live.where(F.col("id") > watermark).toArrow()
-        n = tail.num_rows
         t_ids = AK.one_chunk(tail.column("id")).to_numpy(
             zero_copy_only=False).astype(np.int64, copy=False)
-        t_vecs = AK.fixed_width_matrix(AK.one_chunk(tail.column("vector")), d)
-        if t_vecs is None:
-            t_vecs = np.array(
-                tail.column("vector").to_pylist(), dtype=np.float64
-            ).reshape(n, d)
-        t_vecs = t_vecs.astype(np.float64, copy=False)
+        t_vecs = AK.fixed_width_matrix(tail.column("vector"), d).astype(
+            np.float64, copy=False)
         t_meta = AK.one_chunk(tail.column("metadata")).to_numpy(
             zero_copy_only=False)
         return t_ids, t_vecs, t_meta
@@ -554,15 +500,18 @@ class ResidentSnapshot:
         watermark = int(manifest["max_trained_id"])
         live = db.vectors().select("id", "vector", "metadata")
         # column-pruned scan: only the id column leaves parquet, and it
-        # leaves as ONE Arrow/pandas int64 block (8 bytes/id — ~80 MB at
-        # 10M rows) rather than a Row object per id (~10x that transient
-        # footprint). No assume_unique: if the vectors table ever carries
-        # a duplicate id (the crash-dup shape), isin must still be exact.
+        # leaves as Arrow int64 blocks (8 bytes/id — ~80 MB at 10M rows)
+        # rather than a Row object per id (~10x that transient
+        # footprint); toArrow does not depend on the Arrow flag. No
+        # assume_unique: if the vectors table ever carries a duplicate id
+        # (the crash-dup shape), isin must still be exact.
         live_ids = (
             live.select("id")
             .where(F.col("id") <= watermark)
-            .toPandas()["id"]
-            .to_numpy(dtype=np.int64)
+            .toArrow()
+            .column("id")
+            .to_numpy()
+            .astype(np.int64, copy=False)
         )
         mask = np.isin(self.ids, live_ids)
         if self._too_dead(mask):

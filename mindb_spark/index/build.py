@@ -45,6 +45,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mindb_spark.arrowkit import collect_matrix
 from mindb_spark.core.heuristics import IndexParams, MIN_VECTORS_PER_CLUSTER
 from mindb_spark.index import pq as PQ
 
@@ -95,37 +96,6 @@ class IndexArtifacts:
         return cls(z["mean"], z["pca"], z["centroids"], z["codebooks"])
 
 
-def _to_matrix(rows: list, col: str) -> np.ndarray:
-    return np.array([r[col] for r in rows], dtype=np.float64)
-
-
-def _collect_matrix(df: DataFrame, col: str) -> np.ndarray:
-    """(n, d) float64 matrix of a uniform-width numeric array column,
-    collected as ARROW batches instead of pickled rows (guide §6: Arrow
-    for driver transfers — the training sample collects were the
-    dominant driver cost of every index build once the k-means fits were
-    fixed; a 30k x 64 pickled-row collect measures seconds, the Arrow
-    path tens of ms).
-
-    Values and row order are identical to
-    ``_to_matrix(df.select(col).collect(), col)``: ``toArrow()`` gathers
-    partitions in the same order ``collect()`` does, and float32→float64
-    widening is exact either way. Falls back to the row path for
-    ragged/null vectors (same contract as the arrowkit helpers)."""
-    sel = df.select(col)
-    try:
-        tbl = sel.toArrow()
-    except Exception:
-        return _to_matrix(sel.collect(), col)
-    from mindb_spark.arrowkit import fixed_width_matrix, one_chunk
-
-    arr = one_chunk(tbl.column(0))
-    mat = fixed_width_matrix(arr)
-    if mat is None:  # ragged/null: slow per-row path
-        return _to_matrix(sel.collect(), col)
-    return np.asarray(mat, dtype=np.float64)
-
-
 def fit_pca(
     df: DataFrame, vector_col: str, pca_dim: int, seed: int = 42,
     sample_rows: int = 200_000,
@@ -152,7 +122,7 @@ def fit_pca(
     cap = min(sample_rows, max(10_000, 16_000_000 // max(1, d0)))
     fraction = min(1.0, cap / max(n, 1))
     sample = df.sample(fraction=fraction, seed=seed) if fraction < 1.0 else df
-    mat = _collect_matrix(sample, vector_col)
+    mat = collect_matrix(sample, vector_col)
     mean = mat.mean(axis=0)
     centered = mat - mean
     d = mat.shape[1]
@@ -182,17 +152,14 @@ def _project_df(
     def proj(batches) -> Iterator:
         import pyarrow as pa
 
-        from mindb_spark.arrowkit import fixed_width_matrix, one_chunk
+        from mindb_spark.arrowkit import fixed_width_matrix
 
         mean_, pca_ = b.value
         p = pca_.shape[1]
         for batch in batches:
             if batch.num_rows == 0:
                 continue
-            vec_arr = one_chunk(pa.Table.from_batches([batch]).column(vector_col))
-            mat = fixed_width_matrix(vec_arr)
-            if mat is None:  # ragged/null vectors: slow per-row path
-                mat = np.array(vec_arr.to_pylist(), dtype=np.float64)
+            mat = fixed_width_matrix(batch.column(vector_col))
             out = (mat.astype(np.float64, copy=False) - mean_) @ pca_
             n = out.shape[0]
             lst = pa.ListArray.from_arrays(
@@ -228,7 +195,7 @@ def train_centroids_subsampling(
     if dim is None:  # width of the projected space — callers know it
         dim = len(sample.select(proj_col).first()[0])
     if target * dim <= 32_000_000:
-        mat = _collect_matrix(sample, proj_col)
+        mat = collect_matrix(sample, proj_col)
         # driver-side coarse fit between Spark jobs: raise the BLAS pool
         # for the assignment GEMMs (bit-identical — see PQ._wide_blas;
         # round 13, the session env pins the whole process to 1 thread)
@@ -280,17 +247,15 @@ def train_centroids_two_level(
         # rows passed through as the untouched Arrow list array
         import pyarrow as pa
 
-        from mindb_spark.arrowkit import fixed_width_matrix, one_chunk
+        from mindb_spark.arrowkit import fixed_width_matrix
 
         C = b_coarse.value
         c2 = (C**2).sum(axis=1)
         for batch in batches:
             if batch.num_rows == 0:
                 continue
-            arr = one_chunk(pa.Table.from_batches([batch]).column(proj_col))
+            arr = batch.column(proj_col)
             mat = fixed_width_matrix(arr)
-            if mat is None:
-                mat = np.array(arr.to_pylist(), dtype=np.float64)
             cid = assign_cells(mat.astype(np.float64, copy=False), C, c2)
             yield pa.RecordBatch.from_arrays(
                 [pa.array(cid.astype(np.int32)), arr], names=["_coarse", proj_col]
@@ -359,7 +324,7 @@ def train_pq_on_residuals(
     sample = (
         projected.sample(fraction=fraction, seed=seed) if fraction < 1.0 else projected
     )
-    mat = _collect_matrix(sample, proj_col)
+    mat = collect_matrix(sample, proj_col)
     cid = assign_cells(mat, centroids)
     residuals = mat - centroids[cid]
     return PQ.train_codebooks(residuals.astype(np.float32), m, seed=seed)
@@ -502,11 +467,8 @@ def encode_all(
                 continue
             t = pa.Table.from_batches([batch])
             ids_arr = one_chunk(t.column(id_col))
-            vec_arr = one_chunk(t.column(vector_col))
-            mat = fixed_width_matrix(vec_arr)
-            if mat is None:  # ragged/null vectors: slow per-row path
-                mat = np.array(vec_arr.to_pylist(), dtype=np.float64)
-            mat = mat.astype(np.float64, copy=False)
+            mat = fixed_width_matrix(t.column(vector_col)).astype(
+                np.float64, copy=False)
             proj = (mat - mean) @ pca
             cid = assign_cells(proj, centroids, c2)
             residuals = (proj - centroids[cid]).astype(np.float32)
@@ -590,7 +552,7 @@ def build_index(
         # ADC) is unchanged, and search-time cost is identical to plain PCA
         fraction = min(1.0, PQ_TRAIN_ROWS / max(n, 1))
         s = vectors.sample(fraction=fraction, seed=seed) if fraction < 1.0 else vectors
-        smat = _collect_matrix(s, vector_col)
+        smat = collect_matrix(s, vector_col)
         rot = PQ.fit_opq((smat - mean) @ pca_mat, m, eff_dim, seed=seed)
         pca_mat = pca_mat @ rot
     projected = _project_df(vectors, vector_col, mean, pca_mat).persist()

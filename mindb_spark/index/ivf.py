@@ -48,8 +48,7 @@ _RANK_CHUNK = 16384
 # scan instead of joining against a full-table scan (the small-Q path)
 _SMALL_FETCH_IDS = 4096
 
-from mindb_spark.arrowkit import fixed_width_matrix as _fixed_width_matrix
-from mindb_spark.arrowkit import one_chunk as _one_chunk
+from mindb_spark.arrowkit import fixed_width_matrix, one_chunk
 
 # Fused-vs-two-stage routing: a d-AWARE cost model (round 7). The fused
 # kernel's marginal cost is Arrow-shipping the stored vector of every
@@ -417,30 +416,22 @@ def adc_candidates(
         out_c = {c: [] for c in carry_cols} if rescore else None
         for tbl in rebatched(batches):
             n_rows = tbl.num_rows
-            ids_all = _one_chunk(tbl.column(id_col)).to_numpy(
+            ids_all = one_chunk(tbl.column(id_col)).to_numpy(
                 zero_copy_only=False
             ).astype(np.int64, copy=False)
-            cells_all = _one_chunk(tbl.column("cluster_id")).to_numpy(
+            cells_all = one_chunk(tbl.column("cluster_id")).to_numpy(
                 zero_copy_only=False
             ).astype(np.int64, copy=False)
-            code_arr = _one_chunk(tbl.column("code"))
-            code_all = _fixed_width_matrix(code_arr, m)
-            if code_all is None:  # ragged/null codes: slow per-row path
-                code_all = np.frombuffer(
-                    b"".join(code_arr.to_pylist()), dtype=np.uint8
-                ).reshape(-1, m)
+            code_all = fixed_width_matrix(tbl.column("code"), m)
             bt_all = (
-                _one_chunk(tbl.column("bterm")).to_numpy(
+                one_chunk(tbl.column("bterm")).to_numpy(
                     zero_copy_only=False
                 ).astype(np.float32, copy=False)
                 if B_ is None else None
             )
             if rescore:
-                vec_arr = _one_chunk(tbl.column(vector_col))
-                vmat = _fixed_width_matrix(vec_arr)
-                if vmat is None:
-                    vmat = np.array(vec_arr.to_pylist(), dtype=np.float64)
-                vec_all = vmat.astype(np.float64, copy=False)
+                vec_all = fixed_width_matrix(tbl.column(vector_col)).astype(
+                    np.float64, copy=False)
                 if normalize_rows:
                     nrm = np.linalg.norm(vec_all, axis=1, keepdims=True)
                     nrm[nrm == 0] = 1.0
@@ -448,7 +439,7 @@ def adc_candidates(
                 # carry columns stay pyarrow end to end (take/filter):
                 # converting e.g. metadata strings to Python objects per
                 # scanned row is the same tax the vector path just shed
-                carry_all = {c: _one_chunk(tbl.column(c)) for c in carry_cols}
+                carry_all = {c: one_chunk(tbl.column(c)) for c in carry_cols}
             # compact probed-cell index; UNPROBED cells -> -1 and are
             # dropped here (the scan may be unfiltered when the probe set
             # is dense — see the selectivity-aware pruning above)
@@ -539,7 +530,7 @@ def adc_candidates(
     # Arrow-native scan (mapInArrow): the mapInPandas list-column ->
     # per-row-ndarray conversion cost scaled with SCANNED rows x d and
     # dominated the fused covering path at 1M+ rows; pyarrow arrays
-    # flatten to numpy zero-copy (_fixed_width_matrix) and carry columns
+    # flatten to numpy zero-copy (fixed_width_matrix) and carry columns
     # ride through as Arrow take/filter without ever becoming Python
     # objects.
     scored = pruned.select(*scan_cols).mapInArrow(score, schema=out_schema)
@@ -631,11 +622,8 @@ def rerank_exact(
             qid = batch.column(0).to_numpy(zero_copy_only=False).astype(
                 np.int64, copy=False
             )
-            vec_arr = batch.column(batch.num_columns - 1)
-            mat = _fixed_width_matrix(vec_arr)
-            if mat is None:  # ragged/null vectors: slow per-row path
-                mat = np.array(vec_arr.to_pylist(), dtype=np.float64)
-            mat = mat.astype(np.float64, copy=False)
+            mat = fixed_width_matrix(batch.column(batch.num_columns - 1)).astype(
+                np.float64, copy=False)
             if not normalized:
                 norms = np.linalg.norm(mat, axis=1, keepdims=True)
                 norms[norms == 0] = 1.0

@@ -216,9 +216,9 @@ def _gate_sample_pairs(
     sdf = norm.sample(fraction=frac, seed=seed) if frac < 1.0 else norm
     # Arrow collect (round 13, guide §6): same rows in the same order as
     # the pickled-row collect, zero value conversion
-    from mindb_spark.index.build import _collect_matrix
+    from mindb_spark.arrowkit import collect_matrix
 
-    mat = _collect_matrix(sdf.limit(gate_sample), sdf.columns[1])
+    mat = collect_matrix(sdf.limit(gate_sample), sdf.columns[1])
     if mat.size == 0:
         return None
     # chunked exact self-join so the (rows, rows) score block stays
@@ -746,9 +746,9 @@ def cosine_pairs_ivf(
         frac = min(1.0, sample_rows / n)
         # Arrow collect (round 13, guide §6): identical rows/order/values
         # to the pickled-row collect
-        from mindb_spark.index.build import _collect_matrix
+        from mindb_spark.arrowkit import collect_matrix
 
-        smat = _collect_matrix(
+        smat = collect_matrix(
             norm.sample(fraction=frac, seed=seed) if frac < 1.0 else norm,
             vector_col,
         )

@@ -117,7 +117,7 @@ def knn_batch(
         # (same fix as index/ivf's scan kernel, measured ~4 ms/MB saved)
         import pyarrow as pa
 
-        from mindb_spark.index.ivf import _fixed_width_matrix
+        from mindb_spark.arrowkit import fixed_width_matrix
 
         qm = b_qmat.value  # (Q, d)
         qi = b_qids.value
@@ -127,11 +127,7 @@ def knn_batch(
             ids = batch.column(0).to_numpy(zero_copy_only=False).astype(
                 np.int64, copy=False
             )
-            vec_arr = batch.column(1)
-            mat = _fixed_width_matrix(vec_arr)
-            if mat is None:  # ragged/null vectors: slow per-row path
-                mat = np.array(vec_arr.to_pylist(), dtype=np.float64)
-            mat = mat.astype(np.float64, copy=False)
+            mat = fixed_width_matrix(batch.column(1)).astype(np.float64, copy=False)
             if not normalized:
                 norms = np.linalg.norm(mat, axis=1, keepdims=True)
                 norms[norms == 0] = 1.0

@@ -1,13 +1,16 @@
 """arrowkit: zero-copy pyarrow->numpy bridges used by every Arrow kernel.
 
-The fast paths must reproduce the slow per-row conversion exactly, and
-the guards must refuse (return None) on every layout the fast path
-cannot represent — a wrong matrix here silently corrupts ANN distances.
-No Spark session needed.
+The fast paths must reproduce the per-row values exactly, and the
+guards must raise ValueError on every layout the fast path cannot
+represent — a wrong matrix here silently corrupts ANN distances. No
+Spark session needed.
 """
+
+import pathlib
 
 import numpy as np
 import pyarrow as pa
+import pytest
 
 from mindb_spark.arrowkit import (
     fixed_width_matrix,
@@ -36,12 +39,29 @@ def test_fixed_width_binary_roundtrip_and_slice():
 
 
 def test_ragged_and_null_refused():
-    assert fixed_width_matrix(pa.array([[1.0], [2.0, 3.0]])) is None
-    assert fixed_width_matrix(pa.array([[1.0, 2.0], None])) is None
-    assert fixed_width_matrix(pa.array([[1.0, None]])) is None
-    assert fixed_width_matrix(pa.array([b"a", b"bc"], type=pa.binary())) is None
+    with pytest.raises(ValueError, match="ragged"):
+        fixed_width_matrix(pa.array([[1.0], [2.0, 3.0]]))
+    with pytest.raises(ValueError, match="null rows"):
+        fixed_width_matrix(pa.array([[1.0, 2.0], None]))
+    with pytest.raises(ValueError, match="null values"):
+        fixed_width_matrix(pa.array([[1.0, None]]))
+    with pytest.raises(ValueError, match="ragged"):
+        fixed_width_matrix(pa.array([b"a", b"bc"], type=pa.binary()))
     # declared width must match
-    assert fixed_width_matrix(pa.array([[1.0, 2.0]]), 3) is None
+    with pytest.raises(ValueError, match="expected 3"):
+        fixed_width_matrix(pa.array([[1.0, 2.0]]), 3)
+
+
+def test_slice_ignores_nulls_outside_window():
+    arr = pa.array([[1.0, None], [2.0, 3.0], None])
+    assert fixed_width_matrix(arr.slice(1, 1)).tolist() == [[2.0, 3.0]]
+    with pytest.raises(ValueError, match="null values"):
+        fixed_width_matrix(arr.slice(0, 2))
+    flat, offs = flat_values(arr.slice(1, 1))
+    assert flat.tolist() == [2.0, 3.0] and offs.tolist() == [0, 2]
+    nested = pa.array([[[1.0, None]], [[2.0, 3.0]]])
+    mat, offs = nested_matrix(nested.slice(1))
+    assert mat.tolist() == [[2.0, 3.0]] and offs.tolist() == [0, 1]
 
 
 def test_empty_arrays():
@@ -78,7 +98,8 @@ def test_nested_matrix_buckets():
 
 def test_nested_matrix_refuses_ragged_inner():
     arr = pa.array([[[1.0, 2.0]], [[3.0]]], type=pa.list_(pa.list_(pa.float64())))
-    assert nested_matrix(arr) is None
+    with pytest.raises(ValueError, match="ragged"):
+        nested_matrix(arr)
 
 
 def test_one_chunk_concatenates():
@@ -92,44 +113,44 @@ def test_one_chunk_concatenates():
 
 
 def test_fixed_width_matrix_chunked_stacks_chunks():
-    from mindb_spark.arrowkit import fixed_width_matrix_chunked
-
     c = pa.chunked_array(
         [
             pa.array([[1.0, 2.0], [3.0, 4.0]], type=pa.list_(pa.float64())),
             pa.array([[5.0, 6.0]], type=pa.list_(pa.float64())),
         ]
     )
-    mat = fixed_width_matrix_chunked(c, 2)
+    mat = fixed_width_matrix(c, 2)
     assert mat.tolist() == [[1.0, 2.0], [3.0, 4.0], [5.0, 6.0]]
+    # the width is inferred from the first chunk when not declared
+    assert fixed_width_matrix(c).shape == (3, 2)
     # binary flavor
     cb = pa.chunked_array(
         [pa.array([b"ab", b"cd"]), pa.array([b"ef"])]
     )
-    mb = fixed_width_matrix_chunked(cb, 2)
+    mb = fixed_width_matrix(cb, 2)
     assert mb.tobytes() == b"abcdef" and mb.shape == (3, 2)
 
 
 def test_fixed_width_matrix_chunked_single_chunk_is_view():
-    from mindb_spark.arrowkit import fixed_width_matrix_chunked
-
     c = pa.chunked_array([pa.array([[1.0, 2.0]], type=pa.list_(pa.float64()))])
-    mat = fixed_width_matrix_chunked(c, 2)
+    mat = fixed_width_matrix(c, 2)
     assert mat.shape == (1, 2) and not mat.flags.owndata  # zero-copy view
 
 
-def test_fixed_width_matrix_chunked_ragged_or_empty_is_none():
-    from mindb_spark.arrowkit import fixed_width_matrix_chunked
-
+def test_fixed_width_matrix_chunked_ragged_raises_empty_is_zero_rows():
     ragged = pa.chunked_array(
         [
             pa.array([[1.0, 2.0]], type=pa.list_(pa.float64())),
             pa.array([[3.0]], type=pa.list_(pa.float64())),
         ]
     )
-    assert fixed_width_matrix_chunked(ragged, 2) is None
+    with pytest.raises(ValueError):
+        fixed_width_matrix(ragged, 2)
+    # chunks that disagree on the width are ragged even undeclared
+    with pytest.raises(ValueError):
+        fixed_width_matrix(ragged)
     empty = pa.chunked_array([], type=pa.list_(pa.float64()))
-    assert fixed_width_matrix_chunked(empty, 2) is None
+    assert fixed_width_matrix(empty, 2).shape == (0, 2)
     # an empty chunk between full ones must not poison the stack
     holey = pa.chunked_array(
         [
@@ -138,7 +159,7 @@ def test_fixed_width_matrix_chunked_ragged_or_empty_is_none():
             pa.array([[3.0, 4.0]], type=pa.list_(pa.float64())),
         ]
     )
-    assert fixed_width_matrix_chunked(holey, 2).tolist() == [[1.0, 2.0], [3.0, 4.0]]
+    assert fixed_width_matrix(holey, 2).tolist() == [[1.0, 2.0], [3.0, 4.0]]
 
 
 def test_list_array_inverts_fixed_width_matrix():
@@ -152,3 +173,15 @@ def test_list_array_inverts_fixed_width_matrix():
     mat = np.arange(12, dtype=np.float32).reshape(3, 4)[:, ::2]
     assert list_array(mat).to_pylist() == mat.tolist()
     assert len(list_array(np.empty((0, 5), dtype=np.float32))) == 0
+
+
+def test_no_row_fallback_in_package():
+    """Matrix columns decode through arrowkit or raise; no module keeps
+    its own per-row ``to_pylist`` fallback."""
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "mindb_spark"
+    offenders = [
+        str(p.relative_to(pkg.parent))
+        for p in sorted(pkg.rglob("*.py"))
+        if "to_pylist(" in p.read_text(encoding="utf-8")
+    ]
+    assert offenders == []

@@ -527,6 +527,22 @@ def test_add_dataframe_metadata_encoding_modes(spark, tmp_path):
     db.delete()
 
 
+@pytest.mark.parametrize("null_at", [1, 0], ids=["middle", "first"])
+def test_add_dataframe_rejects_null_vectors(spark, tmp_path, null_at):
+    """A null vector fails the batch-atomic check before any write, like
+    a wrong-size one (``size(NULL)`` is NULL under ANSI mode, so the
+    size test alone lets a null row through)."""
+    db = VectorDB(spark, "nullvec", base_path=str(tmp_path))
+    db.add_dataframe(spark.createDataFrame([([1.0, 0.0],)], "vector array<float>"))
+    rows = [([0.0, 1.0],), ([1.0, 1.0],)]
+    rows.insert(null_at, (None,))
+    with pytest.raises(ValidationError, match="null"):
+        db.add_dataframe(spark.createDataFrame(rows, "vector array<float>"))
+    assert db.vectors().count() == 1 and db.max_id == 0
+    assert db.query([1.0, 0.0], final_top_k=2)["ids"] == [0]
+    db.delete()
+
+
 def test_create_params_pin_dimension_and_memory_cap(spark, tmp_path):
     """Reference create params (mindb.py:42): vector_dimension pre-pins
     validation before any add; max_memory_usage persists in the manifest

@@ -424,9 +424,12 @@ def test_write_through_dense_delete_falls_back_to_rebuild(trained_db, corpus, mo
     assert got["cosine_similarity"] == want["cosine_similarity"]
 
 
-def test_add_and_resident_query_with_arrow_disabled(spark, tmp_path, corpus):
-    """Neither the add path nor the resident snapshot depends on
-    spark.sql.execution.arrow.pyspark.enabled."""
+def test_add_and_resident_query_with_arrow_disabled(spark, tmp_path, corpus, monkeypatch):
+    """Neither the add path nor the resident snapshot (build, write-through
+    and the refresh_deletes scan after another handle's remove) depends
+    on spark.sql.execution.arrow.pyspark.enabled."""
+    from mindb_spark.core.resident import ResidentSnapshot
+
     key = "spark.sql.execution.arrow.pyspark.enabled"
     prev = spark.conf.get(key)
     spark.conf.set(key, "false")
@@ -444,5 +447,15 @@ def test_add_and_resident_query_with_arrow_disabled(spark, tmp_path, corpus):
         want = _spark_results(db, [corpus[3]], 200, 2)[0]
         assert got["ids"] == want["ids"]
         assert got["cosine_similarity"] == want["cosine_similarity"]
+        # a trained-row remove through a second handle: the pinned
+        # snapshot revalidates through refresh_deletes' id scan
+        assert db.enable_resident_serving() is True
+        queries = corpus[[5, 7]]
+        VectorDB(spark, "arrowoff", base_path=str(tmp_path)).remove([5])
+        calls = _count_spark_repairs(monkeypatch)
+        got = db.query_batch_local(queries, 200, 2)
+        assert (calls["refresh_deletes"], calls["build"]) == (1, 0)
+        assert 5 not in got[0]["ids"] and db.resident_info()["masked_rows"] == 1
+        assert got == ResidentSnapshot.build(db, None).query(queries, 200, 2)
     finally:
         spark.conf.set(key, prev)
