@@ -610,28 +610,14 @@ def q_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Transitive near-dup grouping: Jaccard pair edges -> connected
-    components (min-label propagation). Oracle: DuckDB recursive CTE over
-    the identical edge set."""
+    components (per-task union-find contraction, then large-/small-star
+    rounds). Oracle: DuckDB recursive CTE over the identical edge set.
+    Also registered as ``dedup_components_star``."""
     from mindb_spark.operators.dedup import near_dup_components
 
     out = near_dup_components(
         _docs(spark, sf_dir), NEAR_DUP_TAU, k=JACCARD_K,
         max_shingle_freq=JACCARD_MAX_DF,
-    )
-    return out.select(F.col("id").alias("doc_id"), "component")
-
-
-def q_dedup_components_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Transitive near-dup grouping via large-star/small-star contraction
-    (O(log^2 n) rounds guaranteed, diameter-independent — the scale path
-    for adversarial chained-duplicate graphs). Same edges, same DuckDB
-    recursive-CTE oracle, same output as dedup_components: one oracle,
-    two physical algorithms."""
-    from mindb_spark.operators.dedup import near_dup_components
-
-    out = near_dup_components(
-        _docs(spark, sf_dir), NEAR_DUP_TAU, k=JACCARD_K,
-        max_shingle_freq=JACCARD_MAX_DF, algorithm="star",
     )
     return out.select(F.col("id").alias("doc_id"), "component")
 
@@ -2282,7 +2268,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "filtered_knn": q_filtered_knn,
         "filtered_knn_trained": q_filtered_knn_trained,
         "dedup_survivors": q_dedup_survivors,
-        "dedup_components_star": q_dedup_components_star,
+        # same connected-components path as dedup_components; the key
+        # stays because the driver's keys are additions-only
+        "dedup_components_star": q_dedup_components,
         "text_langid": q_text_langid,
         "text_fingerprint": q_text_fingerprint,
         "text_repetition": q_text_repetition,
@@ -3554,7 +3542,6 @@ window w as (partition by user_id order by us, event_id)
 
 def oracle_sql() -> dict[str, str]:
     sql = _oracle_sql_base()
-    # star-contraction components must produce the IDENTICAL map as
-    # min-label — one oracle, two physical algorithms
+    # both component keys run the one connected-components path
     sql["dedup_components_star"] = sql["dedup_components"]
     return sql

@@ -196,11 +196,9 @@ def train_centroids_subsampling(
         dim = len(sample.select(proj_col).first()[0])
     if target * dim <= 32_000_000:
         mat = collect_matrix(sample, proj_col)
-        # driver-side coarse fit between Spark jobs: raise the BLAS pool
-        # for the assignment GEMMs (bit-identical — see PQ._wide_blas;
-        # round 13, the session env pins the whole process to 1 thread)
-        with PQ._wide_blas():
-            return PQ._kmeans(mat, min(k, mat.shape[0]), seed=seed).astype(np.float64)
+        # _kmeans pins BLAS to one thread: centroids are bit-identical
+        # whatever the pool width (see PQ._single_threaded_blas)
+        return PQ._kmeans(mat, min(k, mat.shape[0]), seed=seed).astype(np.float64)
 
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector

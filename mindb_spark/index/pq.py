@@ -124,63 +124,22 @@ def _apply_pin():
 
 
 @contextlib.contextmanager
-def _wide_blas(n_threads: int | None = None):
-    """Scoped BLAS thread-pool RAISE for driver-side training GEMMs.
-
-    The session builder exports ``OMP_NUM_THREADS=1`` before the JVM
-    launches (executor Python workers must not nest BLAS pools under
-    Spark's task parallelism), which also nails the DRIVER's pool to one
-    thread — so the coarse k-means fit, a pure driver-side GEMM loop
-    running between Spark jobs on an otherwise idle machine, was
-    single-threaded (round 13, VERDICT r12 #5; measured ~3x on the 30k
-    fixture's assignment GEMM at 32 threads).
-
-    Bit-identity: OpenBLAS partitions these GEMMs over OUTPUT tiles
-    (M=sample rows), keeping each element's K-loop sequential, so the
-    raised-pool result is BIT-IDENTICAL to the single-threaded one —
-    asserted for the training shapes in
-    tests/test_pq.py::test_kmeans_bit_identical_across_blas_threads.
-    Do not wrap reductions whose output is smaller than the thread count
-    (split-K risk) without extending that test.
-
-    Raises only pools whose current width p satisfies ``0 < p < n``;
-    no-ops (yields) when every pool is already at least ``n`` wide, when
-    no control handle is available, or when a ``_single_threaded_blas``
-    pin is active (never fight the pin — it exists to protect executor
-    workers and the m-way book pool). The pin check, the raise and the
-    restore all hold ``_PIN_LOCK``, so a pin entered on another thread
-    cannot land between the check and the raise and be overwritten.
-    """
-    import os
-
-    n = n_threads or os.cpu_count() or 1
-    controls = _blas_controls()
-    prev = []
-    with _PIN_LOCK:
-        if _PIN_DEPTH == 0:
-            for h, set_fn, get_fn in controls:
-                p = getattr(h, get_fn)()
-                if 0 < p < n:
-                    getattr(h, set_fn)(n)
-                    prev.append((h, set_fn, p))
-    try:
-        yield
-    finally:
-        with _PIN_LOCK:
-            for h, set_fn, p in prev:
-                getattr(h, set_fn)(p)
-
-
-@contextlib.contextmanager
 def _single_threaded_blas():
-    """Pin the BLAS pool to one thread for the duration of the block.
+    """Pin the BLAS pool to one thread for the duration of the block
+    (also usable as a decorator).
 
-    The per-book Lloyd GEMMs are thin ((n, dsub) x (dsub, 256) with dsub
-    of ~4) — BLAS's own threading over them is pure overhead, and nested
-    under the m-way book pool it oversubscribes the machine (measured 5x:
-    4.4 s -> 0.8 s for a 14-book fit on 32 cores). Scoped to the book
-    pool ONLY — the single large coarse k-means is 2x faster WITH BLAS
-    threading.
+    Bit-identity: OpenBLAS splits some GEMMs differently per thread
+    count — on 0.3.23 the float32 ``(4096, 64) @ (64, 96)`` k-means
+    assignment matches the 1-thread bits at pool widths 1/2/4/8 and
+    differs at 3/5/6/7/16/32 — so every driver-side training or gate
+    GEMM (``_kmeans``, the similarity recall gates) runs pinned, and
+    trained artifacts do not depend on the core count. Pinned by
+    tests/test_pq.py::test_kmeans_bit_identical_across_blas_threads.
+
+    Speed: the per-book Lloyd GEMMs are thin ((n, dsub) x (dsub, 256)
+    with dsub of ~4) — BLAS's own threading over them is pure overhead,
+    and nested under the m-way book pool it oversubscribes the machine
+    (measured 5x: 4.4 s -> 0.8 s for a 14-book fit on 32 cores).
 
     Thread-safe (round-8 ADVICE): the pin state is process-global, and
     the resident serving snapshot enters this block per point query,
@@ -214,6 +173,7 @@ def _single_threaded_blas():
                 restore()
 
 
+@_single_threaded_blas()
 def _kmeans(data: np.ndarray, k: int, n_iter: int = 25, seed: int = 42) -> np.ndarray:
     """Plain seeded Lloyd's k-means; returns (k, d) centroids.
 

@@ -295,13 +295,68 @@ def ngram_jaccard_pairs(
         cached.unpersist()
 
 
+#: Edges per contraction task. The width of the contraction step is
+#: ceil(edges / this), never the core count: contraction only collapses a
+#: component that sits whole in one task, so dedup-sized graphs (and a
+#: 1M-edge path) contract in ONE task and converge in one star round.
+#: Sized by kernel memory: the kernel peaks at ~100 B per edge (the
+#: np.unique sort dominates), ~0.2 GB and ~2 s per task at the cap.
+_CC_TASK_EDGES = 1 << 21
+
+
+def _contract_partition(batches):
+    """mapInArrow kernel: union-find over ONE task's (src, dst) edges.
+
+    Ids are densified with ``np.unique`` (sorted, so a smaller index is
+    a smaller id); the loop is a plain union-find with path halving that
+    always hangs the larger root under the smaller, so every local root
+    is the minimum id of its local component. Emits (v, root) and
+    (root, v) for every non-root v: each local component becomes a star
+    on its min, which keeps the node set and the connectivity of the
+    task's edges. Id type in == id type out.
+    """
+    import numpy as np
+    import pyarrow as pa
+
+    kept = [b for b in batches if b.num_rows]
+    if not kept:
+        return
+    typ = kept[0].schema.field(0).type
+    ends = [b.column(i).to_numpy(zero_copy_only=False) for i in (0, 1) for b in kept]
+    ids, inv = np.unique(np.concatenate(ends), return_inverse=True)
+    m = inv.size // 2
+    root = np.arange(ids.size, dtype=np.int64)
+    parent = memoryview(root)  # Python-int element access, ~2x a list's speed
+    for x, y in zip(memoryview(inv[:m]), memoryview(inv[m:])):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        while parent[y] != y:
+            parent[y] = parent[parent[y]]
+            y = parent[y]
+        if x < y:
+            parent[y] = x
+        elif y < x:
+            parent[x] = y
+    while True:  # pointer jumping: every node straight to its root
+        nxt = root[root]
+        if np.array_equal(nxt, root):
+            break
+        root = nxt
+    child = root != np.arange(ids.size)
+    v = pa.array(ids[child], type=typ)
+    r = pa.array(ids[root[child]], type=typ)
+    yield pa.RecordBatch.from_arrays(
+        [pa.concat_arrays([v, r]), pa.concat_arrays([r, v])], names=["src", "dst"]
+    )
+
+
 def _cc_star(und: DataFrame, max_iter: int, stats: dict | None = None) -> DataFrame:
     """Large-star/small-star alternation (Kiveris et al., "Connected
     Components in MapReduce and Beyond", SoCC'14): converges in
-    O(log^2 n) rounds GUARANTEED regardless of graph diameter — the
-    scale path for adversarial long-chain duplicate graphs (crawl
-    mirrors with drifting boilerplate form paths, where min-label
-    propagation needs diameter rounds).
+    O(log^2 n) rounds GUARANTEED regardless of graph diameter, so
+    adversarial long-chain duplicate graphs (crawl mirrors with drifting
+    boilerplate) that outgrow one contraction task still converge.
 
     Each round: large-star connects every strictly-larger neighbor of u
     to min(closed neighborhood of u); small-star connects u and its
@@ -368,93 +423,54 @@ def connected_components(
     a_col: str = "id_a",
     b_col: str = "id_b",
     max_iter: int = 25,
-    algorithm: str = "label",
     stats: dict | None = None,
 ) -> DataFrame:
     """Connected components of an undirected pair graph: (id, component)
-    with ``component`` = the minimum id reachable from ``id``.
+    with ``component`` = the minimum id reachable from ``id`` (same type
+    as the input ids).
 
     The missing step between pairwise near-dup candidates (Jaccard /
     MinHash / SimHash / embedding joins, which emit EDGES) and survivor
     selection: duplicates are transitive, so keep-one-per-group must
     group by component, not by pair.
 
-    Min-label propagation: each iteration every node takes
-    ``min(own label, neighbor labels)`` — two codegen'd shuffles (join +
-    groupBy-min) per iteration, ``localCheckpoint`` truncating the plan
-    so lineage doesn't grow with iterations, early-stop when an iteration
-    changes nothing. Converges in graph-diameter iterations; near-dup
-    clusters are dense and shallow (diameter ~2-3), so this beats the
-    O(log n)-round star algorithms' per-round constant at this workload.
-    ``max_iter`` is a safety valve: exhausting it without convergence
-    RAISES (silently-split components would corrupt survivor selection
-    downstream) — raise it, or switch to ``algorithm="star"``, for
-    pathological long-chain graphs.
+    One algorithm, three steps:
 
-    ``algorithm``: ``"label"`` (default) is min-label propagation —
-    fastest for the shallow dense clusters near-dup dedup produces;
-    ``"star"`` is large-star/small-star alternation (:func:`_cc_star`)
-    with an O(log^2 n) round bound independent of diameter — the
-    guaranteed-convergence path for adversarial chained-duplicate
-    graphs. Identical output contract.
+    1. drop self-loops (and null endpoints);
+    2. local contraction: one ``mapInArrow`` task per
+       ``_CC_TASK_EDGES`` edges union-finds its edges and emits each
+       local component as a star on its min (:func:`_contract_partition`);
+    3. symmetrize + distinct + ``localCheckpoint``, then large-/small-star
+       rounds (:func:`_cc_star`) to the fixed point.
+
+    A graph that fits one task (every dedup-sized graph, any diameter)
+    leaves step 2 already converged, so step 3 takes ONE round; bigger
+    graphs keep the star rounds' O(log^2 n) bound. ``max_iter`` is a
+    safety valve: exhausting it without convergence RAISES
+    (silently-split components would corrupt survivor selection
+    downstream).
 
     ``stats``: optional dict; on return ``stats["rounds"]`` holds the
-    number of shuffle rounds executed (scale probes assert the star
-    path's O(log n) round bound against it).
+    number of star rounds executed (scale probes assert the O(log n)
+    round bound against it).
     """
+    a, b = F.col(a_col), F.col(b_col)
+    typ = edges.select(F.coalesce(a, b)).schema[0].dataType  # common id type
+    pairs = edges.select(
+        a.cast(typ).alias("src"), b.cast(typ).alias("dst")
+    ).where(F.col("src") != F.col("dst"))
+    tasks = -(-pairs.count() // _CC_TASK_EDGES) or 1
+    if pairs.rdd.getNumPartitions() >= tasks:
+        pairs = pairs.coalesce(tasks)
+    else:
+        pairs = pairs.repartition(tasks)
     und = (
-        edges.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
-        .unionAll(edges.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst")))
-        .where(F.col("src") != F.col("dst"))
+        pairs.mapInArrow(_contract_partition, pairs.schema)
         .distinct()
-        # materialized once: every iteration of either algorithm re-reads
-        # the symmetric edge set — without this the union+distinct shuffle
-        # (and any non-checkpointed upstream edge pipeline) re-runs per
-        # iteration
+        # materialized once: every star round re-reads the edge set
         .localCheckpoint(eager=True)
     )
-    if algorithm == "star":
-        return _cc_star(und, max_iter, stats=stats)
-    if algorithm != "label":
-        raise ValueError(f"unknown algorithm {algorithm!r} (label | star)")
-    labels = (
-        und.select(F.col("src").alias("id")).distinct()
-        .withColumn("lbl", F.col("id"))
-        .localCheckpoint(eager=True)
-    )
-    converged = False
-    for round_no in range(max_iter):
-        if stats is not None:
-            stats["rounds"] = round_no + 1
-        prop = (
-            und.join(labels, und.src == labels.id)
-            .groupBy("dst")
-            .agg(F.min("lbl").alias("nlbl"))
-        )
-        # round 12: carry old+new labels through the checkpoint so the
-        # convergence probe is a filter over the ALREADY-MATERIALIZED
-        # rows instead of a fresh shuffle join of new vs old labels —
-        # one exchange per round removed (guide §2.4)
-        new2 = (
-            labels.join(prop, labels.id == prop.dst, "left")
-            .select(
-                "id",
-                F.col("lbl").alias("_old"),
-                F.least(F.col("lbl"), F.coalesce("nlbl", "lbl")).alias("lbl"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        changed = new2.where("lbl != _old").limit(1).count()
-        labels = new2.select("id", "lbl")
-        if changed == 0:
-            converged = True
-            break
-    if not converged:
-        raise RuntimeError(
-            f"connected_components did not converge within max_iter={max_iter} "
-            "iterations (graph diameter exceeds the cap); raise max_iter"
-        )
-    return labels.select("id", F.col("lbl").alias("component"))
+    return _cc_star(und, max_iter, stats=stats)
 
 
 def near_dup_components(
@@ -464,16 +480,16 @@ def near_dup_components(
     text_col: str = "text",
     k: int = 3,
     max_shingle_freq: int | None = None,
-    algorithm: str = "label",
 ) -> DataFrame:
     """(id, component) for every doc in at least one near-dup pair:
-    n-gram Jaccard edges -> connected components. Survivor selection is
-    then ``groupBy(component).min(id)`` + an anti/semi join."""
+    n-gram Jaccard edges -> :func:`connected_components`. Survivor
+    selection is then ``groupBy(component).min(id)`` + an anti/semi
+    join."""
     pairs = ngram_jaccard_pairs(
         df, threshold, id_col=id_col, text_col=text_col, k=k,
         max_shingle_freq=max_shingle_freq,
     )
-    return connected_components(pairs, algorithm=algorithm)
+    return connected_components(pairs)
 
 
 def survivors_from_components(

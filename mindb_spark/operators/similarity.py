@@ -222,15 +222,14 @@ def _gate_sample_pairs(
     if mat.size == 0:
         return None
     # chunked exact self-join so the (rows, rows) score block stays
-    # bounded (~64 MB per chunk) regardless of gate_sample; the BLAS pool
-    # is raised for the driver-side GEMMs (bit-identical — the session
-    # env pins the process to 1 thread for the executors' sake; see
-    # PQ._wide_blas, round 13)
-    from mindb_spark.index.pq import _wide_blas
+    # bounded (~64 MB per chunk) regardless of gate_sample; BLAS pinned
+    # to one thread so the gate's pair set does not depend on the pool
+    # width (see PQ._single_threaded_blas)
+    from mindb_spark.index.pq import _single_threaded_blas
 
     step = max(1, int((1 << 26) // (8 * mat.shape[0])))
     pi, pj, pc = [], [], []
-    with _wide_blas():
+    with _single_threaded_blas():
         for s in range(0, mat.shape[0], step):
             sims = mat[s : s + step] @ mat.T
             ii, jj = np.nonzero(sims >= float(threshold))
@@ -280,11 +279,11 @@ def lsh_measured_pair_recall(
     simulation and the ANN post-train gate)."""
     if gi.size == 0:
         return 0.0
-    from mindb_spark.index.pq import _wide_blas
+    from mindb_spark.index.pq import _single_threaded_blas
 
     rng = np.random.default_rng(seed)
     planes = rng.normal(size=(n_bands * n_bits, dim))
-    with _wide_blas():
+    with _single_threaded_blas():
         bits = (gmat @ planes.T) > 0
     weights = (1 << np.arange(n_bits)).astype(np.int64)
     sigs = bits.reshape(gmat.shape[0], n_bands, n_bits) @ weights
@@ -752,10 +751,8 @@ def cosine_pairs_ivf(
             norm.sample(fraction=frac, seed=seed) if frac < 1.0 else norm,
             vector_col,
         )
-        # driver-side quantizer fit between Spark jobs: raise the BLAS
-        # pool for the assignment GEMMs (bit-identical; see PQ._wide_blas)
-        with PQ._wide_blas():
-            centroids = PQ._kmeans(smat, min(k, len(smat)), seed=seed).astype(np.float64)
+        # driver-side quantizer fit (BLAS-pinned inside _kmeans)
+        centroids = PQ._kmeans(smat, min(k, len(smat)), seed=seed).astype(np.float64)
         c2 = (centroids**2).sum(axis=1)
         na = min(n_assign, centroids.shape[0])
         ck = None

@@ -172,7 +172,7 @@ def test_connected_components_basic(spark):
 def test_connected_components_long_chain_converges(spark):
     from mindb_spark.operators.dedup import connected_components
 
-    n = 30  # path graph: worst case for min-label propagation
+    n = 30  # path graph: diameter n, the long-chain worst case
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(n)], "id_a long, id_b long"
     )
@@ -185,55 +185,120 @@ def test_connected_components_empty(spark):
 
     edges = spark.createDataFrame([], "id_a long, id_b long")
     assert connected_components(edges).count() == 0
-    assert connected_components(edges, algorithm="star").count() == 0
 
 
-def test_star_contraction_matches_label_on_random_graphs(spark):
-    """Both algorithms produce the identical (id, component) map on
-    seeded random graphs (mixed components, isolated pairs, stars)."""
-    import numpy as np
+def _union_find_components(pairs):
+    """Reference (id -> min reachable id) map, pure Python."""
+    parent = {}
 
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}
+
+
+def test_connected_components_matches_union_find_on_random_graphs(
+    spark, monkeypatch
+):
+    """Seeded random graphs (mixed components, isolated pairs, stars,
+    self-loops) give the same (id, component) map as a pure-Python
+    union-find, both contracted in one task and split over many tasks
+    (tiny ``_CC_TASK_EDGES``, so the star rounds do the merging). Small
+    Arrow batches make each contraction task read several batches."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "64")
+    try:
+        rng = np.random.default_rng(5)
+        for trial in range(3):
+            n, m = 200, 300
+            pairs = [(int(a), int(b)) for a, b in rng.integers(0, n, size=(m, 2))]
+            want = _union_find_components([(a, b) for a, b in pairs if a != b])
+            edges = spark.createDataFrame(pairs, "id_a long, id_b long").repartition(6)
+            for task_edges in (D._CC_TASK_EDGES, 40):
+                monkeypatch.setattr(D, "_CC_TASK_EDGES", task_edges)
+                got = {
+                    r.id: r.component
+                    for r in D.connected_components(edges).collect()
+                }
+                assert got == want, (trial, task_edges)
+    finally:
+        spark.conf.set(key, old)
+
+
+def test_connected_components_keeps_int_id_type(spark):
+    """32-bit id columns come back as 32-bit ``id`` / ``component``."""
     from mindb_spark.operators.dedup import connected_components
 
-    rng = np.random.default_rng(5)
-    for trial in range(3):
-        n, m = 200, 300
-        pairs = rng.integers(0, n, size=(m, 2))
-        pairs = [(int(a), int(b)) for a, b in pairs if a != b]
-        edges = spark.createDataFrame(pairs, "id_a long, id_b long")
-        lbl = {r.id: r.component for r in connected_components(edges).collect()}
-        star = {
-            r.id: r.component
-            for r in connected_components(edges, algorithm="star").collect()
-        }
-        assert lbl == star
+    edges = spark.createDataFrame(
+        [(5, 3), (3, 9), (7, 7), (20, 21)], "id_a int, id_b int"
+    )
+    out = connected_components(edges)
+    assert [(f.name, f.dataType.simpleString()) for f in out.schema.fields] == [
+        ("id", "int"),
+        ("component", "int"),
+    ]
+    got = {r.id: r.component for r in out.collect()}
+    assert got == {3: 3, 5: 3, 9: 3, 20: 20, 21: 20}
+
+
+def _permuted_chain(spark, n):
+    import numpy as np
+
+    perm = np.random.default_rng(9).permutation(n)
+    return spark.createDataFrame(
+        [(int(perm[i]), int(perm[i + 1])) for i in range(n - 1)],
+        "id_a long, id_b long",
+    ).repartition(8)
 
 
 def test_star_contraction_long_chain_10k_under_15_rounds(spark):
     """VERDICT r3 #5: a 10k-node path graph (the adversarial
     chained-duplicate shape — crawl mirrors with drifting boilerplate)
-    converges within 15 star rounds, where min-label would need ~10k
-    diameter iterations. Node ids are permuted so the component min sits
-    mid-chain, not at an end."""
-    import numpy as np
-
+    converges in a round count independent of its ~10k diameter. Node
+    ids are permuted so the component min sits mid-chain, not at an
+    end. The whole chain fits one contraction task, so the star phase
+    confirms the fixed point in one round."""
     from mindb_spark.operators.dedup import connected_components
 
     n = 10_000
-    rng = np.random.default_rng(9)
-    perm = rng.permutation(n)
-    edges = spark.createDataFrame(
-        [(int(perm[i]), int(perm[i + 1])) for i in range(n - 1)],
-        "id_a long, id_b long",
-    ).repartition(8)
-    # max_iter=15 doubles as the round-count assertion: _cc_star raises
-    # if the fixed point isn't reached within it
+    stats: dict = {}
     got = {
         r.id: r.component
-        for r in connected_components(edges, algorithm="star", max_iter=15).collect()
+        for r in connected_components(
+            _permuted_chain(spark, n), max_iter=15, stats=stats
+        ).collect()
     }
     assert len(got) == n
     assert set(got.values()) == {0}
+    assert stats["rounds"] == 1
+
+
+def test_connected_components_long_chain_10k_over_many_tasks(spark, monkeypatch):
+    """The same chain split over >= 8 contraction tasks: local
+    contraction leaves path fragments, so the large-/small-star rounds
+    must merge them — more than one round, and within max_iter=15
+    (``_cc_star`` raises past it)."""
+
+    n = 10_000
+    monkeypatch.setattr(D, "_CC_TASK_EDGES", 1_000)  # ceil(9999/1000) = 10 tasks
+    stats: dict = {}
+    got = {
+        r.id: r.component
+        for r in D.connected_components(
+            _permuted_chain(spark, n), max_iter=15, stats=stats
+        ).collect()
+    }
+    assert len(got) == n
+    assert set(got.values()) == {0}
+    assert stats["rounds"] >= 2
 
 
 def test_survivors_from_components(spark):

@@ -1,14 +1,13 @@
 """Connected-components scale probe: 1M nodes, adversarial path graph.
 
-Star-contraction (``connected_components(algorithm="star")``) claims an
-O(log n)-round bound INDEPENDENT of graph diameter — the property that
-matters at crawl scale, where chained near-duplicates (mirror A ~ B ~ C
-~ ...) can form paths the min-label algorithm would need diameter
-rounds to collapse. This probe builds the worst case for label
-propagation — ONE path of ``n`` nodes (diameter n-1) — plus a realistic
-mix of small dense clusters, runs the star path, and records rounds,
-wall time, and nodes/sec. Pass criterion printed alongside:
-rounds <= 2 * log2(n).
+``connected_components`` (per-task union-find contraction, then
+large-/small-star rounds) claims a round count INDEPENDENT of graph
+diameter — the property that matters at crawl scale, where chained
+near-duplicates (mirror A ~ B ~ C ~ ...) can form paths a propagation
+algorithm would need diameter rounds to collapse. This probe builds the
+long-chain worst case — ONE path of ``n`` nodes (diameter n-1) — plus a
+realistic mix of small dense clusters, and records rounds, wall time,
+and nodes/sec. Pass criterion printed alongside: rounds <= 2 * log2(n).
 
 Edges are generated ON EXECUTORS (a path graph is (i, i+1) per id — one
 spark.range projection, no driver materialization), so the probe shape
@@ -38,16 +37,14 @@ def main() -> None:
     spark = get_spark("cc-scale-probe")
     spark.sparkContext.setLogLevel("ERROR")
 
-    # worst case for label propagation: one path 0-1-2-...-(N-1)
+    # long-chain worst case: one path 0-1-2-...-(N-1)
     path_edges = (
         spark.range(N - 1)
         .select(F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b"))
     )
     t0 = time.time()
     stats: dict = {}
-    comp = connected_components(
-        path_edges, max_iter=64, algorithm="star", stats=stats
-    )
+    comp = connected_components(path_edges, max_iter=64, stats=stats)
     agg = comp.agg(
         F.count("*").alias("n"),
         F.countDistinct("component").alias("n_comp"),
@@ -63,7 +60,7 @@ def main() -> None:
     assert agg["n_comp"] == 1 and agg["cmax"] == 0, agg
     assert agg["n"] == N, agg
     assert stats["rounds"] <= bound, (stats, bound)
-    print("single component, min-label contract verified", flush=True)
+    print("single component, component = min reachable id verified", flush=True)
 
     # realistic mix: N nodes in dense clusters of 10 (near-dup shape)
     clus_edges = (
@@ -76,9 +73,7 @@ def main() -> None:
     )
     t0 = time.time()
     stats2: dict = {}
-    comp2 = connected_components(
-        clus_edges, max_iter=64, algorithm="star", stats=stats2
-    )
+    comp2 = connected_components(clus_edges, max_iter=64, stats=stats2)
     n_comp2 = comp2.agg(F.countDistinct("component")).first()[0]
     dt2 = time.time() - t0
     print(

@@ -127,9 +127,7 @@ def main() -> None:
         base = after
         t0 = time.time()
         stats: dict = {}
-        n_nodes = connected_components(
-            pairs, algorithm="star", stats=stats
-        ).count()
+        n_nodes = connected_components(pairs, stats=stats).count()
         dt = time.time() - t0
         after = _shuffle_totals(spark)
         point["components"] = {
