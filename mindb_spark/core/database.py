@@ -24,7 +24,8 @@ Semantics preserved from the reference (SURVEY §2.3):
 Storage layout (``{base}/{name}/``):
 - ``manifest.json``                      — the config.json analog (§1.2)
 - ``vectors/v{N}/``                      — Parquet snapshots; appends add
-  files to the current snapshot, deletes materialize snapshot N+1 (plain
+  files to the current snapshot, deletes materialize snapshot N+1 as hard
+  links to N's files plus a deletion file ``_deleted/ids.parquet`` (plain
   Parquet has no DELETE; on a Delta/Iceberg-backed deployment this class
   maps 1:1 onto table versions)
 - ``index/v{M}/``                        — centroids/codes/artifacts per
@@ -51,6 +52,69 @@ from mindb_spark.core import validation as V
 DEFAULT_BASE = os.path.expanduser("~/.mindb_spark")
 
 VECTOR_SCHEMA = "id long, vector array<float>, metadata string"
+
+# a version's deletion file: the ids removed from its (hard-linked) data
+# files. Spark's directory listing skips ``_``-prefixed names, and so does
+# _data_files, so the sidecar is never read as data
+_DELETED_FILE = os.path.join("_deleted", "ids.parquet")
+# remove() folds the deletion file into a compact() rewrite once it holds
+# more than this fraction of the live rows: past it, every scan pays the
+# anti-join and reads dead rows for more than the rewrite would cost
+_FOLD_DELETED_FRACTION = 0.10
+
+
+def _data_files(data_dir: str) -> list[str]:
+    """Sorted data files of one version directory — exactly the files
+    Spark's listing of the directory reads (it skips ``_``/``.``-prefixed
+    names: the deletion file, ``_SUCCESS``, in-flight temp files)."""
+    if not os.path.isdir(data_dir):
+        return []
+    return sorted(
+        os.path.join(data_dir, f)
+        for f in os.listdir(data_dir)
+        if f.endswith(".parquet") and not f.startswith(("_", "."))
+    )
+
+
+def _deleted_ids(data_dir: str) -> np.ndarray:
+    """Sorted unique int64 ids in the version's deletion file (empty
+    when it has none)."""
+    import pyarrow.parquet as pq
+
+    path = os.path.join(data_dir, _DELETED_FILE)
+    if not os.path.exists(path):
+        return np.empty(0, dtype=np.int64)
+    col = pq.read_table(path, columns=["id"]).column("id")
+    return col.to_numpy().astype(np.int64, copy=False)
+
+
+def _stored_ids(files: list[str], wanted: np.ndarray) -> np.ndarray:
+    """The ids of ``wanted`` (sorted int64) stored in ``files``, one
+    entry per stored row, read driver-side: row groups whose footer
+    min/max ``id`` holds none of ``wanted`` are skipped, and only the
+    ``id`` column of the rest is decoded."""
+    import pyarrow.parquet as pq
+
+    found = []
+    for path in files:
+        with pq.ParquetFile(path) as pf:
+            md = pf.metadata
+            col = next(
+                j for j in range(md.num_columns) if md.schema.column(j).path == "id"
+            )
+            groups = []
+            for g in range(md.num_row_groups):
+                st = md.row_group(g).column(col).statistics
+                if st is not None and st.has_min_max and np.searchsorted(
+                    wanted, st.min
+                ) == np.searchsorted(wanted, st.max, side="right"):
+                    continue  # no wanted id in [min, max]
+                groups.append(g)
+            if groups:
+                ids = pf.read_row_groups(groups, columns=["id"]).column("id")
+                ids = ids.to_numpy().astype(np.int64, copy=False)
+                found.append(ids[np.isin(ids, wanted)])
+    return np.concatenate(found) if found else np.empty(0, dtype=np.int64)
 
 
 def _l2_normalize_ingest_arrow(df: DataFrame) -> DataFrame:
@@ -535,20 +599,37 @@ class VectorDB:
         metric for the small-file problem (streaming ingest appends one
         file per micro-batch per partition); feeds the auto-compaction
         threshold in the streaming sink."""
-        d = self._data_dir
-        if not os.path.isdir(d):
-            return 0
-        return sum(1 for f in os.listdir(d) if f.endswith(".parquet"))
+        return len(_data_files(self._data_dir))
 
     def _has_data(self) -> bool:
-        d = self._data_dir
-        return os.path.isdir(d) and any(f.endswith(".parquet") for f in os.listdir(d))
+        return bool(_data_files(self._data_dir))
 
     def vectors(self) -> DataFrame:
         """The live vectors table (unit-normalized, id-addressed)."""
-        if not self._has_data():
+        return self._read_version(self._data_dir)
+
+    def _read_version(
+        self, data_dir: str, files: list[str] | None = None
+    ) -> DataFrame:
+        """The live rows of one data version: its data files minus the ids
+        in its deletion file (a broadcast ``left_anti`` join on ``id``;
+        without a deletion file the plan is the plain scan).
+
+        ``files`` is the file list a build captured under the path lock
+        (appends landing after it stay invisible); None reads the whole
+        directory. A version's deletion file never changes once the
+        version is live, so a build pinned on version N reads exactly N
+        even after a remove has made N+1."""
+        if not (_data_files(data_dir) if files is None else files):
             return self.spark.createDataFrame([], VECTOR_SCHEMA)
-        return self.spark.read.schema(VECTOR_SCHEMA).parquet(self._data_dir)
+        df = self.spark.read.schema(VECTOR_SCHEMA).parquet(*(files or [data_dir]))
+        deleted = os.path.join(data_dir, _DELETED_FILE)
+        if os.path.exists(deleted):
+            # read by file name: a path that itself starts with "_" reads
+            # the same but makes Spark warn that it ignores it
+            gone = self.spark.read.schema("id long").parquet(deleted)
+            df = df.join(F.broadcast(gone), "id", "left_anti")
+        return df
 
     def coverage_ratio(self) -> float:
         with self._lock:
@@ -856,38 +937,71 @@ class VectorDB:
 
     # ------------------------------------------------------------- delete
     def remove(self, ids) -> list[int]:
-        """Delete by id; returns the ids that actually existed.
+        """Delete by id; returns one entry per live row matched (the ids
+        that actually existed). Unknown or already-deleted ids match
+        nothing, and a call that matches nothing makes no new version.
 
         Plain Parquet has no DELETE, so removal materializes the next
-        snapshot version via an anti-join rewrite (Delta/Iceberg deployments
-        would issue ``DELETE FROM`` instead). Counter rules follow the
-        reference (``mindb.py:529-546``): removing an id at or below the
-        training watermark bumps ``num_trained_vectors_removed``; removing a
-        newer id decrements ``num_new_vectors``.
+        snapshot version — as a driver-side metadata operation with no
+        Spark job (Delta/Iceberg deployments would issue ``DELETE FROM``
+        instead). The live version's data files are pruned by their
+        footer min/max ``id``, only the ``id`` column of the rest is read,
+        and version N+1 is every data file of N hard-linked plus a
+        deletion file ``_deleted/ids.parquet`` holding N's deleted ids and
+        the new ones; readers drop them with an anti-join (see
+        ``_read_version``) — the deletion vectors of Delta Lake (Armbrust
+        et al., VLDB 2020). No data file is decoded or re-encoded. Once
+        the deletion file holds more than ``_FOLD_DELETED_FRACTION`` of
+        the live rows, :meth:`compact` folds it into a rewrite.
+
+        Counter rules follow the reference (``mindb.py:529-546``):
+        removing an id at or below the training watermark bumps
+        ``num_trained_vectors_removed``; removing a newer id decrements
+        ``num_new_vectors``.
         """
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
         self._check_live()
-        ids = V.validate_remove_ids(ids)
-        id_list = [int(x) for x in ids]
+        wanted = np.unique(V.validate_remove_ids(ids))
         with self._lock:
             self._refresh_manifest()
             fp_before = self._fingerprint()
-            current = self.vectors()
-            existing = [
-                r.id for r in current.where(F.col("id").isin(id_list)).select("id").collect()
-            ]
-            if not existing:
+            old_dir = self._data_dir
+            files = _data_files(old_dir)
+            deleted = _deleted_ids(old_dir)
+            existing = _stored_ids(
+                files, np.setdiff1d(wanted, deleted, assume_unique=True)
+            )
+            if not existing.size:
                 return []
             watermark = self._manifest["max_trained_id"]
-            removed_trained = sum(1 for i in existing if i <= watermark)
+            removed_trained = int((existing <= watermark).sum())
 
             next_version = self._manifest["data_version"] + 1
             next_dir = os.path.join(self.path, "vectors", f"v{next_version}")
-            current.where(~F.col("id").isin(id_list)).write.mode("overwrite").parquet(next_dir)
-            old_dir = self._data_dir
-            self._manifest["data_version"] = next_version
-            self._manifest["num_trained_vectors_removed"] += removed_trained
-            self._manifest["num_new_vectors"] -= len(existing) - removed_trained
-            self._save_manifest()
+            # a remove that failed before its manifest save left this
+            # never-live directory behind
+            shutil.rmtree(next_dir, ignore_errors=True)
+            sidecar = os.path.join(next_dir, _DELETED_FILE)
+            os.makedirs(os.path.dirname(sidecar))
+            for f in files:
+                dst = os.path.join(next_dir, os.path.basename(f))
+                try:
+                    os.link(f, dst)
+                except OSError:  # a filesystem without hard links
+                    shutil.copyfile(f, dst)
+            deleted = np.union1d(deleted, existing)
+            pq.write_table(pa.table({"id": pa.array(deleted, pa.int64())}), sidecar)
+            before = self._manifest
+            self._manifest = after = dict(before, data_version=next_version)
+            after["num_trained_vectors_removed"] += removed_trained
+            after["num_new_vectors"] -= existing.size - removed_trained
+            try:
+                self._save_manifest()
+            except BaseException:
+                self._manifest = before  # the old version stays live
+                raise
             self._write_through(
                 fp_before,
                 lambda snap, budget: snap.with_removed(
@@ -899,7 +1013,9 @@ class VectorDB:
                 self._deferred_rm.append(old_dir)
             else:
                 shutil.rmtree(old_dir, ignore_errors=True)
-        return existing
+            if deleted.size > _FOLD_DELETED_FRACTION * self.num_vectors_fast:
+                self.compact()
+        return existing.tolist()
 
     def compact(self, target_rows_per_file: int = 1_000_000) -> int:
         """Rewrite the vectors table as few id-sorted files; returns the
@@ -915,7 +1031,8 @@ class VectorDB:
         id column's min/max row-group stats become disjoint ranges, so
         id-range scans (the unindexed-tail search ``id > max_trained_id``,
         candidate fetches) prune files and row groups instead of reading
-        everything.
+        everything. It rewrites through ``vectors()``, so the new version
+        drops the rows of the old one's deletion file and has none.
         """
         self._check_live()
         with self._lock:
@@ -968,7 +1085,9 @@ class VectorDB:
         the reference's unassigned-vector replay, ``fastapi.py:219-311``):
 
         - the build reads an explicit FILE LIST captured at train start, so
-          files appended by concurrent adds are invisible to the build;
+          files appended by concurrent adds are invisible to the build, and
+          its version's deletion file, which a concurrent remove never
+          changes (it makes the next version);
         - the watermark is the max id IN the snapshot, so rows added during
           the build stay above it and are exactly-searched as the tail;
         - final counters are recomputed from the live table against that
@@ -1043,18 +1162,11 @@ class VectorDB:
         with self._lock:
             self._refresh_manifest()
             snap_dir = self._data_dir
-            files = sorted(
-                os.path.join(snap_dir, f)
-                for f in os.listdir(snap_dir)
-                if f.endswith(".parquet")
-            ) if os.path.isdir(snap_dir) else []
+            files = _data_files(snap_dir)
             self._pins.add(snap_dir)
         committed_version: int | None = None
         try:
-            if files:
-                snapshot = self.spark.read.schema(VECTOR_SCHEMA).parquet(*files)
-            else:
-                snapshot = self.spark.createDataFrame([], VECTOR_SCHEMA)
+            snapshot = self._read_version(snap_dir, files)
             stats = snapshot.agg(
                 F.count("*").alias("n"), F.max("id").alias("smax")
             ).first()
@@ -1311,11 +1423,7 @@ class VectorDB:
                 if new_wm <= old_wm:
                     return 0
                 snap_dir = self._data_dir
-                files = sorted(
-                    os.path.join(snap_dir, f)
-                    for f in os.listdir(snap_dir)
-                    if f.endswith(".parquet")
-                ) if os.path.isdir(snap_dir) else []
+                files = _data_files(snap_dir)
                 self._pins.add(snap_dir)
                 idx_dir = self._index_dir
                 # pin the index dir too: a concurrent delete_db defers its
@@ -1338,7 +1446,7 @@ class VectorDB:
             if not files:
                 return 0
             tail = (
-                self.spark.read.schema(VECTOR_SCHEMA).parquet(*files)
+                self._read_version(snap_dir, files)
                 .where((F.col("id") > old_wm) & (F.col("id") <= new_wm))
                 .persist()  # ONE scan feeds both the count and the encode
             )

@@ -474,8 +474,9 @@ class ResidentSnapshot:
         at 10M rows that collects ~80 MB of ids instead of re-reading
         multi-GB of vectors+metadata (measured ≫10x cheaper than
         ``build``, PERF_NOTES). The big arrays are SHARED with the old
-        snapshot; only the boolean mask and the tail block are new, so a
-        concurrently serving thread never observes torn state.
+        snapshot; only the boolean mask and the tail block (re-read only
+        when adds or tail deletes changed it) are new, so a concurrently
+        serving thread never observes torn state.
 
         Returns None — caller falls back to a full rebuild — when the
         indexed set itself was re-trained (fingerprint positions 0/2/4),
@@ -516,7 +517,14 @@ class ResidentSnapshot:
         mask = np.isin(self.ids, live_ids)
         if self._too_dead(mask):
             return None
-        t_ids, t_vecs, t_meta = self._collect_tail(live, watermark, dim)
+        if (new_fp[1], new_fp[3]) == (old[1], old[3]):
+            # max_id and num_new_vectors unchanged: no add and no tail
+            # delete since this snapshot, so its tail block is current
+            # and the second scan (each pays the anti-join of a version's
+            # deletion file) is skipped
+            t_ids, t_vecs, t_meta = self.tail_ids, self.tail_vectors, self.tail_metadata
+        else:
+            t_ids, t_vecs, t_meta = self._collect_tail(live, watermark, dim)
         return self._evolve(
             manifest, t_ids, t_vecs, t_meta, None if mask.all() else mask
         )
@@ -554,7 +562,7 @@ class ResidentSnapshot:
         """Write-through of the pinning handle's own remove (``ids``: the
         ids that existed; ``manifest``: the post-write manifest): they
         leave the tail and are cleared in the tombstone mask — the mask
-        ``refresh_deletes`` would compute from the rewritten table.
+        ``refresh_deletes`` would compute from the next version.
         Returns None under refresh_deletes' own rules: past
         ``_REBUILD_DEAD_FRACTION`` or over ``max_bytes``."""
         if not self._fits(manifest, dim, max_bytes):

@@ -790,3 +790,172 @@ def test_add_writes_one_parquet_file_bit_equal_to_spark_rows(spark, tmp_path):
     assert db.compact() == 1
     same(db.vectors())
     db.delete()
+
+
+@pytest.fixture(params=["true", "false"], ids=["arrow_on", "arrow_off"])
+def arrow_conf(spark, request):
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, request.param)
+    yield request.param
+    spark.conf.set(key, prev)
+
+
+def test_remove_sequence_matches_live_set_model(spark, tmp_path, monkeypatch, arrow_conf):
+    """A seeded sequence of adds, removes (of live, dead and unknown ids)
+    and compactions, checked after every step against a Python live-set
+    model: remove's return value (``[]`` and no new version when nothing
+    live matched), the manifest counters, ``vectors()``, the deletion
+    file (it folds away once it holds more than 10% of the live rows),
+    and a second handle's resident snapshot, revalidated through
+    ``refresh_deletes``."""
+    import os
+
+    import mindb_spark.core.heuristics as H
+    from mindb_spark.core import database as D
+    from mindb_spark.core.resident import ResidentSnapshot as RS
+
+    monkeypatch.setattr(H, "FLAT_INDEX_CUTOFF", 100)
+    rng = np.random.default_rng(41)
+    db = VectorDB(spark, "model", base_path=str(tmp_path))
+    mat = _mk(rng, 400, 8)
+    db.add([(v, {"i": i}) for i, v in enumerate(mat)])
+    db.train(use_two_level_clustering=False, recall_target=None)
+    watermark, live, pending = 399, set(range(400)), set()
+    counters = {"num_new_vectors": 0, "num_trained_vectors_removed": 0}
+    other = VectorDB(spark, "model", base_path=str(tmp_path))
+    assert other.enable_resident_serving() is True
+    absorbed = []
+    refresh = RS.refresh_deletes
+
+    def counted(self, *args, **kwargs):
+        out = refresh(self, *args, **kwargs)
+        absorbed.append(out is not None)
+        return out
+
+    monkeypatch.setattr(RS, "refresh_deletes", counted)
+    queries = mat[:3]
+    kinds = ["remove", "add", "remove", "dead", "remove", "compact", "remove",
+             "add", "remove", "remove", "dead", "remove", "remove", "remove"]
+    folded = False
+    for step, kind in enumerate(kinds):
+        version = db._manifest["data_version"]
+        if kind == "add":
+            n = int(rng.integers(1, 5))
+            ids = db.add([(v, {"step": step}) for v in _mk(rng, n, 8)])
+            live |= set(ids)
+            counters["num_new_vectors"] += n
+        elif kind == "compact":
+            db.compact()
+            pending = set()
+        else:
+            dead = sorted(set(range(db.max_id + 1)) - live)
+            wanted = [int(i) for i in rng.choice(dead, min(2, len(dead)), replace=False)]
+            wanted.append(db.max_id + 1000)  # never allocated
+            if kind == "remove":
+                wanted += [int(i) for i in rng.choice(sorted(live), 6, replace=False)]
+            expect = sorted(set(wanted) & live)
+            got = db.remove(wanted)
+            assert sorted(got) == expect, step
+            trained = sum(1 for i in expect if i <= watermark)
+            counters["num_trained_vectors_removed"] += trained
+            counters["num_new_vectors"] -= len(expect) - trained
+            live -= set(expect)
+            pending |= set(expect)
+            fold = bool(expect) and len(pending) > 0.1 * len(live)
+            folded |= fold
+            if fold:
+                pending = set()
+            bumps = 0 if not expect else 1 + fold
+            assert db._manifest["data_version"] == version + bumps, step
+        info = db.info()
+        assert info["num_vectors"] == len(live), step
+        assert info["num_vectors_trained_on"] == 400, step
+        for key, value in counters.items():
+            assert info[key] == value, (step, key)
+        assert {r.id for r in db.vectors().select("id").collect()} == live, step
+        assert set(D._deleted_ids(db._data_dir).tolist()) == pending, step
+        assert os.path.isdir(os.path.join(db._data_dir, "_deleted")) == bool(pending)
+        served = other.query_batch_local(queries, 200, 5)
+        assert served == RS.build(db, None).query(queries, 200, 5), step
+        assert all(set(r["ids"]) <= live for r in served), step
+        tail = {i for i in live if i > watermark}
+        assert set(other._resident.tail_ids.tolist()) == tail, step
+    assert folded and any(absorbed)
+    db.delete()
+
+
+def test_remove_failure_before_manifest_save_keeps_old_version(spark, tmp_path, monkeypatch):
+    """A remove that fails after linking the data files and writing the
+    deletion file, but before its manifest save, leaves the old version
+    served with unchanged counters; the next remove clears the orphaned
+    directory and succeeds (here as on a filesystem without hard links,
+    where the data files are copied)."""
+    import os
+
+    from mindb_spark.core import database as D
+
+    rng = np.random.default_rng(42)
+    db = VectorDB(spark, "failrm", base_path=str(tmp_path))
+    db.add([(v, {}) for v in _mk(rng, 50, 8)])
+    assert db.remove([0]) == [0]
+    info, version = db.info(), db._manifest["data_version"]
+    orphan = os.path.join(db.path, "vectors", f"v{version + 1}")
+
+    def fail(self):
+        raise OSError("injected manifest-save failure")
+
+    monkeypatch.setattr(VectorDB, "_save_manifest", fail)
+    with pytest.raises(OSError, match="injected"):
+        db.remove([3, 4])
+    monkeypatch.undo()
+    assert os.path.isfile(os.path.join(orphan, "_deleted", "ids.parquet"))
+    assert db._manifest["data_version"] == version
+    assert db.info() == info
+    survivors = list(range(1, 50))
+    assert sorted(r.id for r in db.vectors().collect()) == survivors
+    other = VectorDB(spark, "failrm", base_path=str(tmp_path))
+    assert sorted(r.id for r in other.vectors().collect()) == survivors
+
+    def no_link(src, dst):
+        raise OSError("hard links not supported")
+
+    monkeypatch.setattr(os, "link", no_link)
+    assert db.remove([5]) == [5]
+    monkeypatch.undo()
+    assert db._manifest["data_version"] == version + 1
+    assert D._deleted_ids(db._data_dir).tolist() == [0, 5]  # not the orphan's 3, 4
+    assert sorted(r.id for r in db.vectors().collect()) == [i for i in survivors if i != 5]
+    assert db.info()["num_new_vectors"] == 48
+    db.delete()
+
+
+def test_point_add_and_remove_run_no_spark_job(spark, tmp_path):
+    """add() and a remove() below the fold threshold run no Spark job.
+    A sentinel job run afterwards in another group shows the status
+    tracker has seen every earlier job before the group is checked."""
+    import time
+    import uuid
+
+    rng = np.random.default_rng(43)
+    db = VectorDB(spark, "nojob", base_path=str(tmp_path))
+    db.add([(v, {}) for v in _mk(rng, 50, 8)])
+    sc = spark.sparkContext
+    group, sentinel = (f"{p}-{uuid.uuid4().hex}" for p in ("writes", "sentinel"))
+    try:
+        sc.setJobGroup(group, "point writes")
+        assert db.add([(v, {}) for v in _mk(rng, 5, 8)]) == list(range(50, 55))
+        assert sorted(db.remove([3, 7, 52, 99])) == [3, 7, 52]
+        sc.setJobGroup(sentinel, "sentinel")
+        spark.range(1).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tracker = sc.statusTracker()
+    deadline = time.time() + 30
+    while not tracker.getJobIdsForGroup(sentinel) and time.time() < deadline:
+        time.sleep(0.05)
+    assert tracker.getJobIdsForGroup(sentinel)
+    assert tracker.getJobIdsForGroup(group) == []
+    assert db.num_vectors == 52
+    db.delete()

@@ -459,3 +459,49 @@ def test_add_and_resident_query_with_arrow_disabled(spark, tmp_path, corpus, mon
         assert got == ResidentSnapshot.build(db, None).query(queries, 200, 2)
     finally:
         spark.conf.set(key, prev)
+
+
+def test_remove_during_pinned_build_never_resurrects(spark, tmp_path, corpus, monkeypatch):
+    """A remove that lands while a training build runs: the build reads
+    exactly its pinned version (the rows that remove deletes included,
+    the version's own earlier delete excluded), the pinned directory is
+    released after the build, and the removed ids never come back on the
+    Spark path or the resident path."""
+    import os
+
+    import mindb_spark.core.heuristics as H
+    from mindb_spark.index import build as B
+
+    monkeypatch.setattr(H, "FLAT_INDEX_CUTOFF", 100)
+    db = VectorDB(spark, "pinrm", base_path=str(tmp_path))
+    db.add([(v, {"i": int(i)}) for i, v in enumerate(corpus[:1000])])
+    assert db.remove([1]) == [1]  # the pinned version has its own deletion file
+    pinned = db._data_dir
+    victims = [0, 2, 3]
+    seen = {}
+    build_index = B.build_index
+
+    def build_with_remove(snapshot, *args, **kwargs):
+        assert db.remove(victims) == victims
+        seen["ids"] = {r.id for r in snapshot.select("id").collect()}
+        seen["pinned_kept"] = os.path.isdir(pinned)
+        return build_index(snapshot, *args, **kwargs)
+
+    monkeypatch.setattr(B, "build_index", build_with_remove)
+    db.train(use_two_level_clustering=False, covering=True, recall_target=None)
+    assert seen == {"ids": set(range(1000)) - {1}, "pinned_kept": True}
+    assert not os.path.exists(pinned)
+    gone = {1, *victims}
+    live = set(range(1000)) - gone
+    assert {r.id for r in db.vectors().select("id").collect()} == live
+    assert db.num_vectors_fast == len(live)
+    assert db.info()["num_trained_vectors_removed"] == len(victims)
+    queries = corpus[sorted(gone)]
+    want = [db.query(q, preliminary_top_k=200, final_top_k=10) for q in queries]
+    assert db.enable_resident_serving() is True
+    got = db.query_batch_local(queries, 200, 10)
+    for g, w in zip(got, want):
+        assert not gone & set(w["ids"]) and not gone & set(g["ids"])
+        assert g["ids"] == w["ids"]
+        assert g["cosine_similarity"] == w["cosine_similarity"]
+    db.delete()

@@ -7,13 +7,19 @@ replaces (``build``: collect codes + vectors + metadata for every
 indexed row). The results are pinned bit-identical by
 tests/test_resident.py; this probe records the latency ratio.
 
+The database lives in a fresh temporary directory (``TMPDIR`` picks its
+parent), removed at exit, so a rerun starts from an empty table.
+
 Usage: python tools/resident_refresh_probe.py [n_rows]  (default 500k)
 """
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -54,7 +60,9 @@ def main() -> None:
         spark.range(N_PARTS).repartition(N_PARTS, "id")
         .mapInPandas(gen, schema="vector array<double>")
     )
-    db = VectorDB(spark, "refreshprobe", base_path="/tmp/refresh_probe_db")
+    tmp = tempfile.mkdtemp(prefix="refresh_probe_")
+    atexit.register(shutil.rmtree, tmp, True)
+    db = VectorDB(spark, "refreshprobe", base_path=tmp)
     t0 = time.time()
     db.add_dataframe(src)
     print(f"ingest: {time.time()-t0:.1f}s for {N} x {D}", flush=True)
