@@ -298,7 +298,8 @@ def ngram_jaccard_pairs(
 #: Edges per contraction task. The width of the contraction step is
 #: ceil(edges / this), never the core count: contraction only collapses a
 #: component that sits whole in one task, so dedup-sized graphs (and a
-#: 1M-edge path) contract in ONE task and converge in one star round.
+#: 1M-edge path) contract in ONE task, whose stars are the components:
+#: no star round runs.
 #: Sized by kernel memory: the kernel peaks at ~100 B per edge (the
 #: np.unique sort dominates), ~0.2 GB and ~2 s per task at the cap.
 _CC_TASK_EDGES = 1 << 21
@@ -348,6 +349,15 @@ def _contract_partition(batches):
     r = pa.array(ids[root[child]], type=typ)
     yield pa.RecordBatch.from_arrays(
         [pa.concat_arrays([v, r]), pa.concat_arrays([r, v])], names=["src", "dst"]
+    )
+
+
+def _star_labels(edges: DataFrame) -> DataFrame:
+    """(id, component) from a symmetric edge set in which every node is
+    adjacent to its component min: per ``src``, ``least(src, min(dst))``."""
+    return (
+        edges.groupBy("src").agg(F.min("dst").alias("mn"))
+        .select(F.col("src").alias("id"), F.least("src", "mn").alias("component"))
     )
 
 
@@ -405,13 +415,7 @@ def _cc_star(und: DataFrame, max_iter: int, stats: dict | None = None) -> DataFr
         new_count = new_edges.count()
         if new_count == n_edges and new_edges.exceptAll(edges).limit(1).count() == 0:
             # fixed point: every node is adjacent to its component min
-            return (
-                edges.groupBy("src").agg(F.min("dst").alias("mn"))
-                .select(
-                    F.col("src").alias("id"),
-                    F.least("src", "mn").alias("component"),
-                )
-            )
+            return _star_labels(edges)
         edges, n_edges = new_edges, new_count
     raise RuntimeError(
         f"star-contraction did not converge within max_iter={max_iter} rounds"
@@ -440,19 +444,21 @@ def connected_components(
     2. local contraction: one ``mapInArrow`` task per
        ``_CC_TASK_EDGES`` edges union-finds its edges and emits each
        local component as a star on its min (:func:`_contract_partition`);
-    3. symmetrize + distinct + ``localCheckpoint``, then large-/small-star
-       rounds (:func:`_cc_star`) to the fixed point.
+    3. only when step 2 spans more than one task: symmetrize + distinct +
+       ``localCheckpoint``, then large-/small-star rounds
+       (:func:`_cc_star`) to the fixed point.
 
     A graph that fits one task (every dedup-sized graph, any diameter)
-    leaves step 2 already converged, so step 3 takes ONE round; bigger
-    graphs keep the star rounds' O(log^2 n) bound. ``max_iter`` is a
-    safety valve: exhausting it without convergence RAISES
-    (silently-split components would corrupt survivor selection
-    downstream).
+    is solved by step 2: its stars are the components, so they are
+    projected straight to (id, component) and checkpointed, and no star
+    round runs. Bigger graphs keep the star rounds' O(log^2 n) bound.
+    ``max_iter`` is a safety valve for those rounds: exhausting it
+    without convergence RAISES (silently-split components would corrupt
+    survivor selection downstream).
 
     ``stats``: optional dict; on return ``stats["rounds"]`` holds the
-    number of star rounds executed (scale probes assert the O(log n)
-    round bound against it).
+    number of star rounds executed, 0 when one task held every edge
+    (scale probes assert the O(log n) round bound against it).
     """
     a, b = F.col(a_col), F.col(b_col)
     typ = edges.select(F.coalesce(a, b)).schema[0].dataType  # common id type
@@ -464,12 +470,15 @@ def connected_components(
         pairs = pairs.coalesce(tasks)
     else:
         pairs = pairs.repartition(tasks)
-    und = (
-        pairs.mapInArrow(_contract_partition, pairs.schema)
-        .distinct()
-        # materialized once: every star round re-reads the edge set
-        .localCheckpoint(eager=True)
-    )
+    stars = pairs.mapInArrow(_contract_partition, pairs.schema)
+    if tasks == 1:
+        # one union-find saw every edge: its stars are the components.
+        # Materialized once, so the caller's reads do not rerun the kernel.
+        if stats is not None:
+            stats["rounds"] = 0
+        return _star_labels(stars).localCheckpoint(eager=True)
+    # materialized once: every star round re-reads the edge set
+    und = stars.distinct().localCheckpoint(eager=True)
     return _cc_star(und, max_iter, stats=stats)
 
 

@@ -209,9 +209,10 @@ def test_connected_components_matches_union_find_on_random_graphs(
 ):
     """Seeded random graphs (mixed components, isolated pairs, stars,
     self-loops) give the same (id, component) map as a pure-Python
-    union-find, both contracted in one task and split over many tasks
-    (tiny ``_CC_TASK_EDGES``, so the star rounds do the merging). Small
-    Arrow batches make each contraction task read several batches."""
+    union-find, both contracted in one task (the contraction's stars are
+    the answer) and split over many tasks (tiny ``_CC_TASK_EDGES``, so
+    the star rounds do the merging). Small Arrow batches make each
+    contraction task read several batches."""
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"
     old = spark.conf.get(key)
     spark.conf.set(key, "64")
@@ -231,6 +232,51 @@ def test_connected_components_matches_union_find_on_random_graphs(
                 assert got == want, (trial, task_edges)
     finally:
         spark.conf.set(key, old)
+
+
+def test_connected_components_one_task_skips_star_rounds(spark, monkeypatch):
+    """A graph that fits one contraction task ends in the contraction:
+    ``_cc_star`` never runs, and the whole call, the result's collect
+    included, takes at most 5 Spark jobs. A sentinel job run afterwards
+    in another group shows the status tracker has seen every earlier job
+    before the group is checked."""
+    import time
+    import uuid
+
+    def no_star(*args, **kwargs):
+        raise AssertionError("star rounds ran for a one-task graph")
+
+    monkeypatch.setattr(D, "_cc_star", no_star)
+    rng = np.random.default_rng(11)
+    pairs = [(int(a), int(b)) for a, b in rng.integers(0, 300, size=(400, 2))]
+    want = _union_find_components([(a, b) for a, b in pairs if a != b])
+    edges = (
+        spark.createDataFrame(pairs, "id_a long, id_b long")
+        .repartition(6)
+        .localCheckpoint(eager=True)
+    )
+    sc = spark.sparkContext
+    group, sentinel = (f"{p}-{uuid.uuid4().hex}" for p in ("cc", "sentinel"))
+    stats: dict = {}
+    try:
+        sc.setJobGroup(group, "one-task connected components")
+        got = {
+            r.id: r.component
+            for r in D.connected_components(edges, stats=stats).collect()
+        }
+        sc.setJobGroup(sentinel, "sentinel")
+        spark.range(1).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tracker = sc.statusTracker()
+    deadline = time.time() + 30
+    while not tracker.getJobIdsForGroup(sentinel) and time.time() < deadline:
+        time.sleep(0.05)
+    assert tracker.getJobIdsForGroup(sentinel)
+    assert got == want
+    assert stats["rounds"] == 0
+    assert len(tracker.getJobIdsForGroup(group)) <= 5
 
 
 def test_connected_components_keeps_int_id_type(spark):
@@ -264,8 +310,8 @@ def test_star_contraction_long_chain_10k_under_15_rounds(spark):
     chained-duplicate shape — crawl mirrors with drifting boilerplate)
     converges in a round count independent of its ~10k diameter. Node
     ids are permuted so the component min sits mid-chain, not at an
-    end. The whole chain fits one contraction task, so the star phase
-    confirms the fixed point in one round."""
+    end. The whole chain fits one contraction task, whose union-find
+    solves it: no star round runs."""
     from mindb_spark.operators.dedup import connected_components
 
     n = 10_000
@@ -278,7 +324,7 @@ def test_star_contraction_long_chain_10k_under_15_rounds(spark):
     }
     assert len(got) == n
     assert set(got.values()) == {0}
-    assert stats["rounds"] == 1
+    assert stats["rounds"] == 0
 
 
 def test_connected_components_long_chain_10k_over_many_tasks(spark, monkeypatch):

@@ -8,6 +8,10 @@ algorithm would need diameter rounds to collapse. This probe builds the
 long-chain worst case — ONE path of ``n`` nodes (diameter n-1) — plus a
 realistic mix of small dense clusters, and records rounds, wall time,
 and nodes/sec. Pass criterion printed alongside: rounds <= 2 * log2(n).
+Up to ``_CC_TASK_EDGES`` (2^21) edges a graph contracts in one task
+whose union-find already yields the components, so the default 1M-node
+shapes report 0 rounds; pass ``n_nodes`` above 2^21 to exercise the
+star rounds.
 
 Edges are generated ON EXECUTORS (a path graph is (i, i+1) per id — one
 spark.range projection, no driver materialization), so the probe shape
