@@ -84,6 +84,22 @@ def fixed_width_matrix(col, width: int | None = None) -> np.ndarray:
     raise ValueError(f"not a list or binary column: {col.type}")
 
 
+def gather_rows(col, rows: np.ndarray, width: int, dtype) -> np.ndarray:
+    """Rows ``rows`` of a matrix column (as :func:`fixed_width_matrix`)
+    as a new ``dtype`` array, gathered chunk by chunk from its views."""
+    chunks = col.chunks if isinstance(col, pa.ChunkedArray) else [col]
+    out = np.empty((rows.size, width), dtype=dtype)
+    ends = np.cumsum([len(c) for c in chunks], dtype=np.int64)
+    which = np.searchsorted(ends, rows, side="right")
+    by = np.argsort(which, kind="stable")
+    cuts = np.searchsorted(which[by], np.arange(len(chunks) + 1))
+    for k, ch in enumerate(chunks):
+        dst = by[cuts[k]:cuts[k + 1]]
+        if dst.size:
+            out[dst] = fixed_width_matrix(ch, width)[rows[dst] - (ends[k] - len(ch))]
+    return out
+
+
 def _values_window(arr, offs: np.ndarray) -> np.ndarray:
     """numpy view of the child values that rows ``offs`` reference;
     ValueError on a null among them."""

@@ -36,10 +36,12 @@ Storage layout (``{base}/{name}/``):
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import shutil
 import threading
+from collections import Counter
 from typing import Any
 
 import numpy as np
@@ -88,14 +90,16 @@ def _deleted_ids(data_dir: str) -> np.ndarray:
     return col.to_numpy().astype(np.int64, copy=False)
 
 
-def _stored_ids(files: list[str], wanted: np.ndarray) -> np.ndarray:
-    """The ids of ``wanted`` (sorted int64) stored in ``files``, one
-    entry per stored row, read driver-side: row groups whose footer
-    min/max ``id`` holds none of ``wanted`` are skipped, and only the
-    ``id`` column of the rest is decoded."""
+def _read_rows(files: list[str], schema, lo: int, hi: int, gone=()):
+    """The rows of parquet ``files`` with ``lo <= id <= hi`` and ``id``
+    not in ``gone``, as one pyarrow table of ``schema``. Row groups whose
+    footer min/max ``id`` misses the range are skipped. Each file's table
+    is cast to ``schema``: Spark marks some columns ``not null`` that
+    files written from Arrow do not."""
+    import pyarrow as pa
     import pyarrow.parquet as pq
 
-    found = []
+    parts = []
     for path in files:
         with pq.ParquetFile(path) as pf:
             md = pf.metadata
@@ -105,16 +109,30 @@ def _stored_ids(files: list[str], wanted: np.ndarray) -> np.ndarray:
             groups = []
             for g in range(md.num_row_groups):
                 st = md.row_group(g).column(col).statistics
-                if st is not None and st.has_min_max and np.searchsorted(
-                    wanted, st.min
-                ) == np.searchsorted(wanted, st.max, side="right"):
-                    continue  # no wanted id in [min, max]
+                if st is not None and st.has_min_max and (st.max < lo or st.min > hi):
+                    continue
                 groups.append(g)
-            if groups:
-                ids = pf.read_row_groups(groups, columns=["id"]).column("id")
-                ids = ids.to_numpy().astype(np.int64, copy=False)
-                found.append(ids[np.isin(ids, wanted)])
-    return np.concatenate(found) if found else np.empty(0, dtype=np.int64)
+            if not groups:
+                continue
+            table = pf.read_row_groups(groups, columns=schema.names)
+        ids = table.column("id").to_numpy()
+        keep = (ids >= lo) & (ids <= hi) & ~np.isin(ids, gone)
+        if not keep.all():
+            table = table.filter(pa.array(keep))
+        parts.append(table.cast(schema))
+    return pa.concat_tables(parts) if parts else schema.empty_table()
+
+
+def _read_live(data_dir: str, columns: list[str], lo: int, hi: int):
+    """The live rows of one data version with ``lo <= id <= hi`` and
+    the ``VECTOR_SCHEMA`` ``columns``: its data files minus the ids in
+    its deletion file, read driver-side with no Spark job."""
+    import pyarrow as pa
+
+    vector = pa.list_(pa.field("element", pa.float32()))
+    types = {"id": pa.int64(), "vector": vector, "metadata": pa.string()}
+    schema = pa.schema([(c, types[c]) for c in columns])
+    return _read_rows(_data_files(data_dir), schema, lo, hi, _deleted_ids(data_dir))
 
 
 def _l2_normalize_ingest_arrow(df: DataFrame) -> DataFrame:
@@ -171,11 +189,11 @@ class _PathState:
         # on it; index_tail acquires it non-blocking and no-ops when a
         # build already holds it
         self.index_mutex = threading.Lock()
-        # snapshot dirs pinned by an in-flight training build: remove()
-        # must not rmtree a pinned dir mid-build — removal is deferred
-        # until the build releases the pin (the reference's deferred-
-        # delete machinery, fastapi.py:219-241, collapsed to a dir pin)
-        self.pins: set[str] = set()
+        # dirs pinned (counted: readers overlap) by reads outside the
+        # lock — builds, tail encodes, resident snapshots: their removal
+        # is deferred until the last pin is released (the reference's
+        # deferred-delete machinery, fastapi.py:219-241, as a dir pin)
+        self.pins: Counter = Counter()
         self.deferred_rm: list[str] = []
         # deletion epoch, bumped by tombstone_and_remove. Every handle
         # records the epoch it was created under; a handle whose epoch
@@ -371,10 +389,10 @@ class VectorDB:
             self._save_manifest()
 
     # shared pin state: plain delegation so existing call sites (including
-    # the `deferred, self._deferred_rm = self._deferred_rm, []` swap)
+    # the drain's reassignment of `self._deferred_rm`)
     # operate on the per-path object, not a per-handle copy
     @property
-    def _pins(self) -> set:
+    def _pins(self) -> Counter:
         return self._pstate.pins
 
     @property
@@ -964,15 +982,15 @@ class VectorDB:
 
         self._check_live()
         wanted = np.unique(V.validate_remove_ids(ids))
+        if not wanted.size:
+            return []
         with self._lock:
             self._refresh_manifest()
             fp_before = self._fingerprint()
             old_dir = self._data_dir
             files = _data_files(old_dir)
-            deleted = _deleted_ids(old_dir)
-            existing = _stored_ids(
-                files, np.setdiff1d(wanted, deleted, assume_unique=True)
-            )
+            stored = _read_live(old_dir, ["id"], wanted[0], wanted[-1])["id"].to_numpy()
+            existing = stored[np.isin(stored, wanted)]
             if not existing.size:
                 return []
             watermark = self._manifest["max_trained_id"]
@@ -991,7 +1009,7 @@ class VectorDB:
                     os.link(f, dst)
                 except OSError:  # a filesystem without hard links
                     shutil.copyfile(f, dst)
-            deleted = np.union1d(deleted, existing)
+            deleted = np.union1d(_deleted_ids(old_dir), existing)
             pq.write_table(pa.table({"id": pa.array(deleted, pa.int64())}), sidecar)
             before = self._manifest
             self._manifest = after = dict(before, data_version=next_version)
@@ -1008,11 +1026,7 @@ class VectorDB:
                     self._manifest, existing, int(self.vector_dimension), budget
                 ),
             )
-            if old_dir in self._pins:
-                # an in-flight training build is still reading this snapshot
-                self._deferred_rm.append(old_dir)
-            else:
-                shutil.rmtree(old_dir, ignore_errors=True)
+            self._retire(old_dir)
             if deleted.size > _FOLD_DELETED_FRACTION * self.num_vectors_fast:
                 self.compact()
         return existing.tolist()
@@ -1055,11 +1069,31 @@ class VectorDB:
             old_dir = self._data_dir
             self._manifest["data_version"] = next_version
             self._save_manifest()
-            if old_dir in self._pins:
-                self._deferred_rm.append(old_dir)
-            else:
-                shutil.rmtree(old_dir, ignore_errors=True)
+            self._retire(old_dir)
         return n_files
+
+    def _retire(self, old_dir: str) -> None:
+        """Delete a directory the manifest no longer points at, or defer
+        it until its last pin is released. Call under the path lock."""
+        if old_dir in self._pins:
+            self._deferred_rm.append(old_dir)
+        else:
+            shutil.rmtree(old_dir, ignore_errors=True)
+
+    @contextlib.contextmanager
+    def _pinned_version(self):
+        """Yield ``(manifest, data_dir, index_dir)`` for a read outside the
+        path lock: a copy of the on-disk manifest and its two directories,
+        pinned until the block exits (see :meth:`_retire`)."""
+        with self._lock:
+            self._sync_manifest_from_disk()
+            manifest = dict(self._manifest)
+            dirs = (self._data_dir, self._index_dir)
+            self._pins.update(p for p in dirs if p is not None)
+        try:
+            yield (manifest, *dirs)
+        finally:
+            self._drain_deferred_and_reap(*dirs)
 
     # ------------------------------------------------------------- train
     def train(
@@ -1163,7 +1197,7 @@ class VectorDB:
             self._refresh_manifest()
             snap_dir = self._data_dir
             files = _data_files(snap_dir)
-            self._pins.add(snap_dir)
+            self._pins[snap_dir] += 1
         committed_version: int | None = None
         try:
             snapshot = self._read_version(snap_dir, files)
@@ -1250,9 +1284,10 @@ class VectorDB:
                 committed_version = next_version
             # old index versions are garbage; keep only the live one
             index_root = os.path.join(self.path, "index")
-            for entry in os.listdir(index_root):
-                if entry != f"v{next_version}":
-                    shutil.rmtree(os.path.join(index_root, entry), ignore_errors=True)
+            with self._lock:
+                for entry in os.listdir(index_root):
+                    if entry != f"v{next_version}":
+                        self._retire(os.path.join(index_root, entry))
         finally:
             self._index_mutex.release()
             self._drain_deferred_and_reap(snap_dir)
@@ -1336,8 +1371,8 @@ class VectorDB:
     def _drain_deferred_and_reap(self, *unpin: "str | None") -> None:
         """Build-finalizer cleanup: release this build's snapshot pins,
         drain removals a concurrent ``remove``/``compact``/``delete_db``
-        deferred on those pins, and — when the database was DELETED
-        mid-run (stale epoch) — finish removing the tombstoned tree.
+        deferred on dirs no longer pinned, and — when the database was
+        DELETED mid-run (stale epoch) — finish removing the tombstoned tree.
         ``tombstone_and_remove`` had to leave the pinned dirs (and any
         dirs a doomed build recreated afterwards) in place; without this
         reap they would survive as on-disk orphans. The reap checks
@@ -1345,10 +1380,11 @@ class VectorDB:
         writes its manifest while holding the same lock, so a recreated
         database's fresh tree can never be deleted here."""
         with self._lock:
-            for p in unpin:
-                if p is not None:
-                    self._pins.discard(p)
-            deferred, self._deferred_rm = self._deferred_rm, []
+            # Counter subtraction keeps only the dirs still pinned
+            self._pstate.pins -= Counter(p for p in unpin if p is not None)
+            pinned = {os.path.abspath(p) for p in self._pins}
+            deferred = [d for d in self._deferred_rm if os.path.abspath(d) not in pinned]
+            self._deferred_rm = [d for d in self._deferred_rm if d not in deferred]
             stale = self._pstate.epoch != self._epoch
         for d in deferred:
             shutil.rmtree(d, ignore_errors=True)
@@ -1424,13 +1460,13 @@ class VectorDB:
                     return 0
                 snap_dir = self._data_dir
                 files = _data_files(snap_dir)
-                self._pins.add(snap_dir)
+                self._pins[snap_dir] += 1
                 idx_dir = self._index_dir
                 # pin the index dir too: a concurrent delete_db defers its
                 # removal to this finalizer's drain instead of racing the
                 # in-flight codes append (which would fail tasks mid-write
                 # and could leave a recreated-orphan index tree behind)
-                self._pins.add(idx_dir)
+                self._pins[idx_dir] += 1
                 n_buckets = self._manifest["n_buckets"]
                 # a covering index stores (vector, metadata) with each
                 # code — the tail append must match that schema or later
@@ -1690,18 +1726,18 @@ class VectorDB:
         the Spark path) when untrained or over ``max_bytes``.
 
         Staying current: this handle's own ``add``/``remove`` are written
-        through to the snapshot under the path lock (no Spark scan —
+        through to the snapshot under the path lock (no read at all —
         see ``_write_through``). Writes through any other handle or
         process stale its fingerprint, and the next query repairs it
-        with a Spark refresh (tail reload, tombstone-mask scan) or, past
-        the dead-fraction or budget limits, a full rebuild or disable."""
+        from the files, no Spark job (tail re-read, tombstone mask) or,
+        past the dead-fraction or budget limits, a full rebuild or disable."""
         from mindb_spark.core.resident import ResidentSnapshot
 
-        # build OUTSIDE the path lock: the collect is seconds of Spark
-        # work and must not block concurrent add/remove/train on this
-        # path. A mutation racing the build leaves the snapshot stale at
-        # pin time — harmless, because _resident_serve revalidates the
-        # fingerprint under the lock before every serve and self-heals
+        # build OUTSIDE the path lock, on a pinned version: a large read
+        # must not block concurrent add/remove/train. A mutation racing
+        # the build leaves the snapshot stale at pin time — harmless,
+        # because _resident_serve revalidates the fingerprint under the
+        # lock before every serve and self-heals
         snap = ResidentSnapshot.build(self, max_bytes)
         with self._lock:
             self._resident = snap
@@ -1739,10 +1775,10 @@ class VectorDB:
         AND the batch is in the resident regime, else None (caller uses
         the Spark path).
 
-        Staleness checks run under the handle lock, but the Spark work of
-        resolving staleness (tail refresh / full rebuild) runs OUTSIDE it
-        — holding the shared path lock across a collect would block
-        concurrent add/remove/train for seconds. The refreshed snapshot
+        Staleness checks run under the handle lock, but the pinned file
+        reads that resolve staleness (tail refresh / full rebuild) run
+        OUTSIDE it — holding the shared path lock across a large read
+        would block concurrent add/remove/train. The refreshed snapshot
         is adopted under the lock only if it is still current; when yet
         another mutation landed mid-refresh, this call serves via Spark
         and the next one retries (correctness never depends on the
@@ -1769,9 +1805,9 @@ class VectorDB:
             )
 
         if stale:
-            # lock-free Spark work, cheapest repair first: adds-only ->
-            # tail reload; trained-row deletes -> tombstone mask (one
-            # id-column scan, big arrays shared); only a retrain or a
+            # lock-free file reads, cheapest repair first: adds-only ->
+            # tail re-read; trained-row deletes -> tombstone mask (one
+            # id-column read, big arrays shared); only a retrain or a
             # >10%-dead mask -> budgeted full rebuild (None when over
             # budget or untrained)
             budget = getattr(self, "_resident_budget", None)

@@ -9,13 +9,13 @@ measured on a warm 30k index, PERF_NOTES "REST latency probe"),
 corpus-size-independent and irreducible from SQL.
 
 This module makes the same trade the reference makes — RAM for serving
-latency — WITHOUT giving up the Spark path:
+latency — WITHOUT giving up the Spark path, and runs no Spark job:
 
-- ``ResidentSnapshot.build(db)`` collects the trained codes table
-  (joined against the live vectors table, so deleted rows drop out
-  exactly like stage 2's inner join) plus the unindexed tail into
-  driver numpy arrays, CSR-sliced by cell. One Spark job, RAM-bounded
-  by an explicit byte budget checked BEFORE the collect.
+- ``ResidentSnapshot.build(db)`` reads the live version's files with
+  pyarrow: the codes joined in numpy to the live rows (data files minus
+  the deletion file, so deleted rows drop out exactly like stage 2's
+  inner join), plus the unindexed tail, CSR-sliced by cell. RAM-bounded
+  by an explicit byte budget checked BEFORE the read.
 - ``snapshot.query(...)`` replays the scan kernel's exact math
   driver-side: same float32 decomposed-ADC accumulation order
   (d2 + bterm + per-subspace gathers, ``index/ivf.py adc_candidates``),
@@ -28,18 +28,18 @@ latency — WITHOUT giving up the Spark path:
   (write-through, ``with_added`` / ``with_removed``): the handle already
   holds every row it writes, so under its path lock it installs a new
   snapshot — added rows appended to the tail, removed ids dropped from
-  the tail and cleared in the tombstone mask — with no Spark scan.
+  the tail and cleared in the tombstone mask — with no read at all.
   Writes from ANY OTHER handle (or process) stale the fingerprint and
-  are repaired on the next query by a Spark refresh: adds only grow the
-  tail → ``refresh_tail`` reloads just the tail block (one cheap pruned
-  scan); deletes of trained rows → ``refresh_deletes`` recomputes the
-  tombstone mask (one id-column scan — at 10M rows ~80 MB of ids vs the
-  multi-GB vector reload a rebuild pays). Both paths share one budget
-  rule and the ``_REBUILD_DEAD_FRACTION`` cut: past either, the snapshot
-  is left stale and only a full rebuild (or disabling) follows, as it
-  does after a retrain. ``VectorDB.query`` checks validity under the
-  handle lock before every resident serve and falls back to the Spark
-  path whenever the snapshot cannot be (re)validated within budget.
+  are repaired on the next query from the files: adds only grow the
+  tail → ``refresh_tail`` re-reads just the tail block (row groups
+  pruned by id); deletes of trained rows → ``refresh_deletes``
+  recomputes the tombstone mask from the live id column (at 10M rows
+  ~80 MB of ids vs the multi-GB reload a rebuild pays). Both paths
+  share one budget rule and the ``_REBUILD_DEAD_FRACTION`` cut: past
+  either, only a full rebuild (or disabling) follows, as after a
+  retrain. ``VectorDB.query`` revalidates under the handle lock before
+  every resident serve and falls back to the Spark path whenever that
+  fails. Every read pins its version (``VectorDB._pinned_version``).
 
 The snapshot is the SERVING-TIER cache for RAM-sized indexes (the only
 regime the reference supports at all); beyond-RAM corpora stay on the
@@ -48,11 +48,23 @@ Spark scan path, which is the point of this engine.
 
 from __future__ import annotations
 
+import glob
 import os
 
 import numpy as np
 
+from mindb_spark import arrowkit as AK
 from mindb_spark.index import pq as PQ
+
+
+def _rows(live, rows: np.ndarray, d: int):
+    """(ids, float64 (n, d) vectors, metadata) of rows ``rows`` of a
+    ``_read_live`` table; no Arrow ``take`` of the vector column."""
+    return (
+        live.column("id").to_numpy()[rows],
+        AK.gather_rows(live.column("vector"), rows, d, np.float64),
+        live.column("metadata").take(rows).to_numpy(zero_copy_only=False),
+    )
 
 
 def _lex_top(primary: np.ndarray, ids: np.ndarray, k: int) -> np.ndarray:
@@ -273,59 +285,61 @@ class ResidentSnapshot:
 
     @classmethod
     def build(cls, db, max_bytes: int | None) -> "ResidentSnapshot | None":
-        """Collect the snapshot from ``db`` (a trained VectorDB).
+        """Read the snapshot from the files of ``db``'s live version.
 
-        Returns None when the pre-collect estimate exceeds ``max_bytes``
-        — the caller stays on the Spark path. Cites the reference's
-        resident-DB design: ``mindb/mindb.py`` (Faiss + vector store in
-        RAM per open DB), budgeted by the same LRU cache this engine
-        re-implements in ``core/cache.py``.
+        Returns None when untrained or when the pre-read estimate exceeds
+        ``max_bytes`` — the caller stays on the Spark path. Cites the
+        reference's resident-DB design: ``mindb/mindb.py`` (Faiss + vector
+        store in RAM per open DB), budgeted by the same LRU cache this
+        engine re-implements in ``core/cache.py``.
         """
-        from pyspark.sql import functions as F
+        import pyarrow as pa
+        import pyarrow.parquet as pq
 
-        manifest = dict(db._manifest)
-        if manifest.get("index_version") is None:
-            return None
-        artifacts = db._load_artifacts()
-        d = int(db.vector_dimension)
-        m = int(artifacts.m)
-        n_est = int(manifest.get("num_vectors_trained_on") or 0)
-        # the tail is part of the snapshot
-        est = cls.estimate_bytes(n_est, d, m) + cls.estimate_tail_bytes(
-            cls._tail_bound(manifest), d
-        )
-        if max_bytes is not None and est > max_bytes:
-            return None
+        from mindb_spark.core.database import _read_live, _read_rows
+        from mindb_spark.index.build import IndexArtifacts
 
-        live = db.vectors().select("id", "vector", "metadata")
-        codes_dir = os.path.join(db._index_dir, "codes")
-        codes_df = db.spark.read.parquet(codes_dir)
-        cols = ["cluster_id", "id", "code"]
-        has_bterm = "bterm" in codes_df.columns
-        if has_bterm:
-            cols.append("bterm")
-        watermark = int(manifest["max_trained_id"])
-        # watermark filter mirrors ivf.search: codes rows above it belong
-        # to the tail block (a racing append); inner join drops deletes.
-        # dropDuplicates is the same crash-dup insurance both Spark paths
-        # carry: a codes append whose manifest save never landed can
-        # duplicate an id, and an undeduped snapshot would emit that id
-        # in two of the final_top_k slots
-        # Arrow collect: the table lands as contiguous buffers (ids/bterm/
-        # codes/vectors each one block) that the snapshot arrays VIEW
-        # zero-copy — a Row collect materializes ~10x the data size in
-        # Python objects (a 1M x 768-d snapshot would transiently need
-        # tens of GB of Rows vs ~6 GB of Arrow buffers)
-        table = (
-            codes_df.select(*cols)
-            .where(F.col("id") <= watermark)
-            .dropDuplicates(["id"])
-            .join(live, "id")
-            .orderBy("cluster_id", "id")
-            .toArrow()
+        with db._pinned_version() as (manifest, data_dir, index_dir):
+            if manifest.get("index_version") is None:
+                return None
+            artifacts = IndexArtifacts.load(os.path.join(index_dir, "artifacts.npz"))
+            d = int(manifest["vector_dimension"])
+            m = int(artifacts.m)
+            n_est = int(manifest.get("num_vectors_trained_on") or 0)
+            # the tail is part of the snapshot
+            est = cls.estimate_bytes(n_est, d, m) + cls.estimate_tail_bytes(
+                cls._tail_bound(manifest), d
+            )
+            if max_bytes is not None and est > max_bytes:
+                return None
+            files = sorted(glob.glob(os.path.join(index_dir, "codes", "*", "*.parquet")))
+            has_bterm = all("bterm" in pq.read_schema(f).names for f in files)
+            cols = [("id", pa.int64()), ("cluster_id", pa.int32()),
+                    ("code", pa.binary()), ("bterm", pa.float32())]
+            schema = pa.schema(cols if has_bterm else cols[:3])
+            # the watermark bound mirrors ivf.search: codes rows above it
+            # belong to the tail block (a racing append)
+            watermark = int(manifest["max_trained_id"])
+            codes = _read_rows(files, schema, 0, watermark)
+            live = _read_live(
+                data_dir, ["id", "vector", "metadata"], 0, int(manifest["max_id"])
+            )
+        live_ids = live.column("id").to_numpy()
+        # the join keeps the FIRST codes row of each id: the crash-dup
+        # insurance both Spark paths carry (a codes append whose manifest
+        # save never landed can duplicate an id, which would take two of
+        # the final_top_k slots); a stable sort of the id-sorted join
+        # gives (cluster_id, id) order
+        _, crow, lrow = np.intersect1d(
+            codes.column("id").to_numpy(), live_ids, return_indices=True
         )
-        t_ids, t_vecs, t_meta = cls._collect_tail(live, watermark, d)
-        return cls.assemble_from_arrow(
+        cells = codes.column("cluster_id").to_numpy().astype(np.int64)
+        order = np.argsort(cells[crow], kind="stable")
+        crow, lrow = crow[order], lrow[order]
+        ids, vectors, metadata = _rows(live, lrow, d)
+        tail = np.flatnonzero(live_ids > watermark)
+        tail = tail[np.argsort(live_ids[tail], kind="stable")]
+        return cls._from_arrays(
             artifacts,
             # the recall gate's measured boost (when recorded) is the
             # query-time default, same resolution as VectorDB.query_df
@@ -333,8 +347,11 @@ class ResidentSnapshot:
                 manifest.get("n_probe_default")
                 or manifest["index_params"]["n_probe"]
             ),
-            table, d, m, has_bterm,
-            t_ids, t_vecs, t_meta,
+            ids,
+            cells[crow],
+            AK.gather_rows(codes.column("code"), crow, m, np.uint8),
+            codes.column("bterm").to_numpy()[crow] if has_bterm else None,
+            vectors, metadata, d, m, *_rows(live, tail, d),
             cls.manifest_fingerprint(manifest),
         )
 
@@ -357,8 +374,6 @@ class ResidentSnapshot:
         (cluster_id, id)). The numeric arrays are zero-copy VIEWS over
         the table's buffers (the views keep the buffers alive), so peak
         driver memory is ~the data size, not the Row-object blowup."""
-        from mindb_spark import arrowkit as AK
-
         n = table.num_rows
         # primitive columns: ChunkedArray.to_numpy concatenates in numpy
         # (no Arrow offset arithmetic); list/binary matrix columns go
@@ -421,113 +436,64 @@ class ResidentSnapshot:
             fingerprint,
         )
 
-    @staticmethod
-    def _collect_tail(live, watermark: int, d: int):
-        from pyspark.sql import functions as F
-
-        from mindb_spark import arrowkit as AK
-
-        tail = live.where(F.col("id") > watermark).toArrow()
-        t_ids = AK.one_chunk(tail.column("id")).to_numpy(
-            zero_copy_only=False).astype(np.int64, copy=False)
-        t_vecs = AK.fixed_width_matrix(tail.column("vector"), d).astype(
-            np.float64, copy=False)
-        t_meta = AK.one_chunk(tail.column("metadata")).to_numpy(
-            zero_copy_only=False)
-        return t_ids, t_vecs, t_meta
-
     def refresh_tail(self, db, max_bytes: int | None = None) -> "ResidentSnapshot | None":
         """Cheap revalidation when only the UNINDEXED part changed (adds,
-        or removals of tail-only rows): reload just the tail block (ids
-        above the indexed watermark) from the live table. Returns a NEW
-        snapshot sharing the big indexed arrays (so a concurrently
+        or removals of tail-only rows): re-read just the tail block (ids
+        in ``(max_trained_id, max_id]``) from the version's files. Returns
+        a NEW snapshot sharing the big indexed arrays (so a concurrently
         serving thread never observes torn tail state), or None when the
         indexed set itself changed (retrain / trained-row delete) OR the
         tail bound no longer fits ``max_bytes`` — caller falls back to a
         budgeted full rebuild (which re-checks the same bound)."""
-        manifest = dict(db._manifest)
-        new_fp = self.manifest_fingerprint(manifest)
-        old = self.fingerprint
-        # positions: 0 index_version, 2 max_trained_id,
-        # 4 num_vectors_trained_on, 5 num_trained_vectors_removed —
-        # unchanged means the indexed rows this snapshot holds are still
-        # exactly the indexed rows; everything else lives in the tail
-        if (new_fp[0], new_fp[2], new_fp[4], new_fp[5]) != (
-            old[0], old[2], old[4], old[5]
-        ):
-            return None
-        dim = self.vectors.shape[1] if self.vectors.size else int(db.vector_dimension)
-        if not self._fits(manifest, dim, max_bytes):
-            return None
-        watermark = int(manifest["max_trained_id"])
-        t_ids, t_vecs, t_meta = self._collect_tail(
-            db.vectors().select("id", "vector", "metadata"), watermark, dim
-        )
-        return self._evolve(manifest, t_ids, t_vecs, t_meta, self.live_mask)
+        return self._refresh(db, max_bytes, deletes=False)
 
     def refresh_deletes(
         self, db, max_bytes: int | None = None
     ) -> "ResidentSnapshot | None":
         """Tombstone-mask revalidation when trained rows were DELETED
-        (and any mix of adds/tail deletes happened alongside): one
-        id-column scan recomputes which snapshot rows are still live —
-        at 10M rows that collects ~80 MB of ids instead of re-reading
-        multi-GB of vectors+metadata (measured ≫10x cheaper than
-        ``build``, PERF_NOTES). The big arrays are SHARED with the old
-        snapshot; only the boolean mask and the tail block (re-read only
-        when adds or tail deletes changed it) are new, so a concurrently
-        serving thread never observes torn state.
+        (and any mix of adds/tail deletes happened alongside): the live
+        ``id`` column at or below the watermark gives which snapshot rows
+        are still live — at 10M rows ~80 MB of ids instead of multi-GB of
+        vectors+metadata — and the tail block is re-read as in
+        ``refresh_tail``. Only the mask and the tail are new; the big
+        arrays are SHARED, so a serving thread never sees torn state.
 
         Returns None — caller falls back to a full rebuild — when the
         indexed set itself was re-trained (fingerprint positions 0/2/4),
         when the dead fraction passes ``_REBUILD_DEAD_FRACTION`` (the
         snapshot would waste RAM and per-query gather work), or when the
         budget no longer fits."""
-        from pyspark.sql import functions as F
+        return self._refresh(db, max_bytes, deletes=True)
 
-        manifest = dict(db._manifest)
-        new_fp = self.manifest_fingerprint(manifest)
-        old = self.fingerprint
-        # 0 index_version, 2 max_trained_id, 4 num_vectors_trained_on:
-        # unchanged means the snapshot's indexed ROWS are still the
-        # index's rows — deletions only shrink the live subset, which the
-        # mask expresses. (Position 5, num_trained_vectors_removed, is
-        # exactly what this path absorbs; 1/3 are tail growth.)
-        if (new_fp[0], new_fp[2], new_fp[4]) != (old[0], old[2], old[4]):
-            return None
-        dim = self.vectors.shape[1] if self.vectors.size else int(db.vector_dimension)
-        if not self._fits(manifest, dim, max_bytes):
-            return None
-        watermark = int(manifest["max_trained_id"])
-        live = db.vectors().select("id", "vector", "metadata")
-        # column-pruned scan: only the id column leaves parquet, and it
-        # leaves as Arrow int64 blocks (8 bytes/id — ~80 MB at 10M rows)
-        # rather than a Row object per id (~10x that transient
-        # footprint); toArrow does not depend on the Arrow flag. No
-        # assume_unique: if the vectors table ever carries a duplicate id
-        # (the crash-dup shape), isin must still be exact.
-        live_ids = (
-            live.select("id")
-            .where(F.col("id") <= watermark)
-            .toArrow()
-            .column("id")
-            .to_numpy()
-            .astype(np.int64, copy=False)
-        )
-        mask = np.isin(self.ids, live_ids)
-        if self._too_dead(mask):
-            return None
-        if (new_fp[1], new_fp[3]) == (old[1], old[3]):
-            # max_id and num_new_vectors unchanged: no add and no tail
-            # delete since this snapshot, so its tail block is current
-            # and the second scan (each pays the anti-join of a version's
-            # deletion file) is skipped
-            t_ids, t_vecs, t_meta = self.tail_ids, self.tail_vectors, self.tail_metadata
-        else:
-            t_ids, t_vecs, t_meta = self._collect_tail(live, watermark, dim)
-        return self._evolve(
-            manifest, t_ids, t_vecs, t_meta, None if mask.all() else mask
-        )
+    def _refresh(self, db, max_bytes, deletes: bool) -> "ResidentSnapshot | None":
+        from mindb_spark.core.database import _read_live
+
+        with db._pinned_version() as (manifest, data_dir, _):
+            # unchanged 0 index_version, 2 max_trained_id and
+            # 4 num_vectors_trained_on: the snapshot's indexed rows are
+            # still the index's rows. 5 num_trained_vectors_removed is
+            # what the mask absorbs; 1/3 are tail growth
+            same = (0, 2, 4) if deletes else (0, 2, 4, 5)
+            fp = self.manifest_fingerprint(manifest)
+            d = int(manifest["vector_dimension"])
+            if any(fp[i] != self.fingerprint[i] for i in same) or not self._fits(
+                manifest, d, max_bytes
+            ):
+                return None
+            mask, watermark = self.live_mask, int(manifest["max_trained_id"])
+            if deletes:
+                # no assume_unique: if the vectors table ever carries a
+                # duplicate id (the crash-dup shape), isin must stay exact
+                live = _read_live(data_dir, ["id"], 0, watermark)
+                mask = np.isin(self.ids, live.column("id").to_numpy())
+                if self._too_dead(mask):
+                    return None
+                mask = None if mask.all() else mask
+            tail = _read_live(
+                data_dir, ["id", "vector", "metadata"], watermark + 1, int(manifest["max_id"])
+            )
+        order = np.argsort(tail.column("id").to_numpy(), kind="stable")
+        return self._evolve(manifest, *_rows(tail, order, d), mask)
 
     def _too_dead(self, mask: np.ndarray) -> bool:
         """The mask's dead fraction passes ``_REBUILD_DEAD_FRACTION``."""
@@ -540,7 +506,7 @@ class ResidentSnapshot:
         metadata: list, max_bytes: int | None = None,
     ) -> "ResidentSnapshot | None":
         """Write-through of the pinning handle's own add: the rows join
-        the tail exactly as ``_collect_tail`` would read them back —
+        the tail exactly as ``refresh_tail`` would read them back —
         ``vectors`` are the stored float32 values, widened to float64;
         ``metadata`` the stored JSON strings. ``manifest`` is the
         post-write manifest. Returns None (the caller leaves the

@@ -459,24 +459,6 @@ def load_gate_certifications(path: str) -> int:
     return n
 
 
-def simhash_signature_udf(planes: np.ndarray):
-    """Pandas UDF mapping vector -> int64 random-hyperplane signature."""
-    from pyspark.sql.functions import pandas_udf
-
-    n_bits = planes.shape[0]
-    if n_bits > 63:
-        raise ValueError("at most 63 hyperplane bits fit a signed int64")
-
-    @pandas_udf("long")
-    def sig(vectors: pd.Series) -> pd.Series:
-        mat = np.array(vectors.tolist(), dtype=np.float64)
-        bits = (mat @ planes.T) > 0  # (n, n_bits)
-        weights = (1 << np.arange(n_bits)).astype(np.int64)
-        return pd.Series(bits @ weights)
-
-    return sig
-
-
 def cosine_pairs_lsh(
     df: DataFrame,
     threshold: float,

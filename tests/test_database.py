@@ -959,3 +959,81 @@ def test_point_add_and_remove_run_no_spark_job(spark, tmp_path):
     assert tracker.getJobIdsForGroup(group) == []
     assert db.num_vectors == 52
     db.delete()
+
+
+def test_overlapping_pins_defer_removal_until_the_last_release(spark, tmp_path):
+    """Pins are counted per directory: when two readers pin one version
+    and a remove retires it, releasing the first pin keeps the directory
+    (and its deferred removal) for the second; the last release reaps it."""
+    import os
+
+    rng = np.random.default_rng(44)
+    db = VectorDB(spark, "pins", base_path=str(tmp_path))
+    db.add([(v, {}) for v in _mk(rng, 20, 8)])
+    first = db._data_dir
+    with db._pinned_version() as (_, outer_dir, _):
+        with db._pinned_version() as (manifest, data_dir, index_dir):
+            assert data_dir == outer_dir == first and index_dir is None
+            assert db.remove([1]) == [1]
+            assert manifest["data_version"] != db._manifest["data_version"]
+        assert os.path.isdir(first) and db._deferred_rm == [first]
+    assert not os.path.exists(first) and not db._pins and not db._deferred_rm
+    assert db.num_vectors_fast == 19
+
+
+def test_pins_hold_under_concurrent_readers_and_removes(spark, tmp_path):
+    """Readers that pin the live version and read its files while another
+    handle keeps removing rows (each remove retires the version it
+    replaces) never lose a file mid-read, and once all are done no pin,
+    deferred removal or retired version directory is left."""
+    import os
+    import random
+    import sys
+    import threading
+    import time
+
+    from mindb_spark.core.database import _read_live
+
+    rng = np.random.default_rng(45)
+    db = VectorDB(spark, "pinstress", base_path=str(tmp_path))
+    db.add([(v, {}) for v in _mk(rng, 1000, 8)])
+    other = VectorDB(spark, "pinstress", base_path=str(tmp_path))
+    errors, done = [], threading.Event()
+
+    def reader(seed):
+        pause = random.Random(seed)
+        while not done.is_set():
+            try:
+                with db._pinned_version() as (manifest, data_dir, _):
+                    # hold the pin across removes, so pins overlap and
+                    # some reader releases while another still reads
+                    time.sleep(0.02 * pause.random())
+                    n = _read_live(data_dir, ["id", "vector"], 0, 999).num_rows
+                    if n != manifest["num_new_vectors"]:  # untrained: all rows
+                        errors.append(("rows", n, manifest["num_new_vectors"]))
+            except Exception as exc:  # a file removed mid-read
+                errors.append(repr(exc))
+
+    def remover():
+        try:
+            for i in range(0, 90, 2):  # 45 removes, below the 10% fold
+                assert other.remove([i]) == [i]
+        finally:
+            done.set()
+
+    prev = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=reader, args=(i,)) for i in range(8)]
+        threads.append(threading.Thread(target=remover))
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+        assert not any(t.is_alive() for t in threads)
+    finally:
+        sys.setswitchinterval(prev)
+    assert not errors, errors[:3]
+    assert not db._pins and not db._deferred_rm
+    assert os.listdir(os.path.join(db.path, "vectors")) == [os.path.basename(other._data_dir)]
+    assert db.num_vectors_fast == 955

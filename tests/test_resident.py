@@ -505,3 +505,170 @@ def test_remove_during_pinned_build_never_resurrects(spark, tmp_path, corpus, mo
         assert g["ids"] == w["ids"]
         assert g["cosine_similarity"] == w["cosine_similarity"]
     db.delete()
+
+
+def _spark_snapshot(db):
+    """Reference arrays from the Spark plan the snapshot was once
+    collected with: codes at or below the watermark, deduplicated by id,
+    joined to ``vectors()``, ordered by (cluster_id, id); the tail is
+    ``vectors()`` above the watermark, in id order."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    from mindb_spark import arrowkit as AK
+
+    codes = db.spark.read.parquet(os.path.join(db._index_dir, "codes"))
+    cols = ["cluster_id", "id", "code"] + (["bterm"] if "bterm" in codes.columns else [])
+    wm = db._manifest["max_trained_id"]
+    live = db.vectors().select("id", "vector", "metadata")
+    t = (
+        codes.select(*cols).where(F.col("id") <= wm).dropDuplicates(["id"])
+        .join(live, "id").orderBy("cluster_id", "id").toArrow()
+    )
+    tail = live.where(F.col("id") > wm).orderBy("id").toArrow()
+    return {
+        "ids": t.column("id").to_numpy(),
+        "codes": AK.fixed_width_matrix(t.column("code")),
+        "bterm": t.column("bterm").to_numpy() if "bterm" in cols else None,
+        "vectors": AK.fixed_width_matrix(t.column("vector")).astype(np.float64),
+        "metadata": t.column("metadata").to_pylist(),
+        "tail_ids": tail.column("id").to_numpy(),
+        "tail_vectors": AK.fixed_width_matrix(tail.column("vector")).astype(np.float64),
+        "tail_metadata": tail.column("metadata").to_pylist(),
+    }
+
+
+def _assert_snapshot_matches_spark(db):
+    from mindb_spark.core.resident import ResidentSnapshot
+
+    snap = ResidentSnapshot.build(db, None)
+    want = _spark_snapshot(db)
+    for name, ref in want.items():
+        got = getattr(snap, name)
+        if name == "bterm" and ref is None:
+            continue
+        if name.endswith("metadata"):
+            assert list(got) == ref, name
+        else:
+            assert got.dtype == ref.dtype and np.array_equal(got, ref), name
+    assert snap.live_mask is None and snap.ids.size
+    return snap
+
+
+@pytest.mark.parametrize("covering", [True, False])
+@pytest.mark.parametrize("arrow", ["true", "false"])
+def test_file_built_snapshot_matches_spark_plan(spark, tmp_path, corpus, covering, arrow):
+    """A snapshot read from the version's files holds the same arrays, bit
+    for bit, as the Spark codes ⋈ vectors() plan: on a version with a
+    deletion file and a tail, with a codes file copied (duplicate codes
+    rows), and after compact() folded the deletion file. The trained rows
+    come from Spark-written files whose ``metadata`` is ``not null``, the
+    tail from Arrow-written ones where it is nullable."""
+    import glob
+    import os
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, arrow)
+    try:
+        db = VectorDB(spark, "filebuilt", base_path=str(tmp_path))
+        rows = [(v.tolist(),) for v in corpus[:5200]]
+        db.add_dataframe(spark.createDataFrame(rows, "vector array<float>"))
+        spark_file = glob.glob(os.path.join(db._data_dir, "part-*.parquet"))[0]
+        assert not pq.read_schema(spark_file).field("metadata").nullable
+        db.train(use_two_level_clustering=False, covering=covering)
+        db.add([(v, {"tail": int(i)}) for i, v in enumerate(corpus[5200:5230])])
+        assert len(db.remove([3, 17, 400, 5201])) == 4
+        assert os.path.exists(os.path.join(db._data_dir, "_deleted", "ids.parquet"))
+        snap = _assert_snapshot_matches_spark(db)
+        assert snap.ids.size == 5197 and snap.tail_ids.size == 29
+
+        src = sorted(glob.glob(os.path.join(db._index_dir, "codes", "*", "*.parquet")))[0]
+        shutil.copyfile(src, os.path.join(os.path.dirname(src), "part-copy.parquet"))
+        assert _assert_snapshot_matches_spark(db).ids.size == 5197
+
+        db.compact()
+        assert not os.path.exists(os.path.join(db._data_dir, "_deleted"))
+        assert _assert_snapshot_matches_spark(db).ids.size == 5197
+    finally:
+        spark.conf.set(key, prev)
+
+
+def test_snapshot_build_and_refreshes_run_no_spark_job(spark, trained_db, corpus):
+    """build, refresh_tail and refresh_deletes read the version's files
+    and run no Spark job. A sentinel job run afterwards in another group
+    shows the status tracker has seen every earlier job before the group
+    is checked."""
+    import os
+    import time
+    import uuid
+
+    from mindb_spark.core.resident import ResidentSnapshot
+
+    db = trained_db
+    other = VectorDB(spark, db.name, base_path=os.path.dirname(db.path))
+    sc = spark.sparkContext
+    group, sentinel = (f"{p}-{uuid.uuid4().hex}" for p in ("resident", "sentinel"))
+    try:
+        sc.setJobGroup(group, "resident snapshot")
+        snap = ResidentSnapshot.build(db, None)
+        other.add([(corpus[0], {"tail": True})])
+        snap = snap.refresh_tail(db)
+        assert snap is not None and snap.tail_ids.size == 1
+        other.remove([5, 6])
+        snap = snap.refresh_deletes(db)
+        assert snap is not None and int((~snap.live_mask).sum()) == 2
+        sc.setJobGroup(sentinel, "sentinel")
+        spark.range(1).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tracker = sc.statusTracker()
+    deadline = time.time() + 30
+    while not tracker.getJobIdsForGroup(sentinel) and time.time() < deadline:
+        time.sleep(0.05)
+    assert tracker.getJobIdsForGroup(sentinel)
+    assert tracker.getJobIdsForGroup(group) == []
+
+
+def test_remove_between_pin_and_read_defers_the_old_version(spark, trained_db, corpus, monkeypatch):
+    """A snapshot repair pins the version it reads. A second handle's
+    remove that lands between the pin and the read makes the next version
+    but leaves the pinned directory in place; the repair reads it to the
+    end, and the directory is reaped when the pin is released."""
+    import os
+
+    import mindb_spark.core.database as D
+
+    db = trained_db
+    assert db.enable_resident_serving() is True
+    other = VectorDB(spark, db.name, base_path=os.path.dirname(db.path))
+    other.add([(corpus[0], {"tail": True})])  # stales the snapshot: adds only
+    pinned = db._data_dir
+    victim = 11
+    seen = {}
+    read_live = D._read_live
+
+    def remove_then_read(data_dir, *args, **kwargs):
+        seen.setdefault("dirs", set()).add(data_dir)
+        if "kept" not in seen:
+            seen["kept"] = None  # the remove reads through here too
+            assert other.remove([victim]) == [victim]
+            seen["kept"] = os.path.isdir(pinned) and pinned in db._pins
+        return read_live(data_dir, *args, **kwargs)
+
+    monkeypatch.setattr(D, "_read_live", remove_then_read)
+    calls = _count_spark_repairs(monkeypatch)
+    q = corpus[victim]
+    # the repair read the pinned version, so its fingerprint is already
+    # stale when it ends: this call is served by Spark
+    assert db.query_batch_local(q[None, :], 500, 3) is None
+    assert seen == {"kept": True, "dirs": {pinned}}
+    assert calls == dict(refresh_tail=1, refresh_deletes=0, build=0)
+    assert not os.path.exists(pinned) and not db._pins and not db._deferred_rm
+    got = db.query_batch_local(q[None, :], 500, 3)[0]
+    assert victim not in got["ids"] and db.resident_info()["masked_rows"] == 1

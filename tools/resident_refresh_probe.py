@@ -1,10 +1,13 @@
-"""Resident-snapshot refresh-vs-rebuild cost (VERDICT r5 item 6).
+"""Resident-snapshot refresh-vs-rebuild cost.
 
 Measures, on a trained VectorDB, the cost of absorbing a sparse delete
-into the serving snapshot via the round-6 tombstone mask
-(``refresh_deletes``: one id-column scan) against the full rebuild it
-replaces (``build``: collect codes + vectors + metadata for every
-indexed row). The results are pinned bit-identical by
+into the serving snapshot via the tombstone mask (``refresh_deletes``:
+the live id column read from the version's files, plus the tail block)
+against the full rebuild it replaces (``build``: codes, vectors and
+metadata of every indexed row, read from the version's files with
+pyarrow). Each step runs in its own Spark job group and prints the
+number of Spark jobs it ran (0 for all three since the snapshot stopped
+using Spark). The results are pinned bit-identical by
 tests/test_resident.py; this probe records the latency ratio.
 
 The database lives in a fresh temporary directory (``TMPDIR`` picks its
@@ -70,28 +73,44 @@ def main() -> None:
     db.train()
     print(f"train: {time.time()-t0:.1f}s", flush=True)
 
-    t0 = time.time()
-    snap = ResidentSnapshot.build(db, max_bytes=None)
-    t_build = time.time() - t0
-    print(f"full build: {t_build:.1f}s ({snap.ids.size} rows, "
+    sc = spark.sparkContext
+
+    def timed(label, fn):
+        """(result, seconds, Spark jobs) of ``fn()`` in its own job group."""
+        group = f"refresh-probe-{label}"
+        sc.setJobGroup(group, label)
+        try:
+            t0 = time.time()
+            out = fn()
+            secs = time.time() - t0
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        time.sleep(0.5)  # let the status tracker see any job the call ran
+        return out, secs, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    snap, t_build, jobs = timed("build", lambda: ResidentSnapshot.build(db, max_bytes=None))
+    print(f"full build: {t_build:.2f}s, {jobs} jobs ({snap.ids.size} rows, "
           f"{snap.nbytes()/1e6:.0f} MB)", flush=True)
 
     victims = [int(i) for i in rng.integers(0, N, size=50)]
     db.remove(sorted(set(victims)))
-    t0 = time.time()
-    refreshed = snap.refresh_deletes(db, max_bytes=None)
-    t_refresh = time.time() - t0
+    refreshed, t_refresh, jobs = timed(
+        "refresh_deletes", lambda: snap.refresh_deletes(db, max_bytes=None)
+    )
     assert refreshed is not None and refreshed.live_mask is not None
     dead = int(refreshed.ids.size - refreshed.live_mask.sum())
     print(
-        f"tombstone refresh: {t_refresh:.2f}s ({dead} masked) — "
+        f"tombstone refresh: {t_refresh * 1e3:.1f} ms, {jobs} jobs ({dead} masked) — "
         f"{t_build / t_refresh:.0f}x cheaper than rebuild", flush=True,
     )
+    db.add([(rng.normal(size=D).astype(np.float32), {}) for _ in range(10)])
+    _, t_tail, jobs = timed(
+        "refresh_tail", lambda: refreshed.refresh_tail(db, max_bytes=None)
+    )
+    print(f"tail refresh (10 adds): {t_tail * 1e3:.1f} ms, {jobs} jobs", flush=True)
     # and the post-delete rebuild for the same state, for the honest ratio
-    t0 = time.time()
-    snap2 = ResidentSnapshot.build(db, max_bytes=None)
-    t_build2 = time.time() - t0
-    print(f"post-delete full rebuild: {t_build2:.1f}s "
+    _, t_build2, jobs = timed("rebuild", lambda: ResidentSnapshot.build(db, max_bytes=None))
+    print(f"post-delete full rebuild: {t_build2:.2f}s, {jobs} jobs "
           f"(ratio vs refresh: {t_build2 / t_refresh:.0f}x)", flush=True)
 
 
